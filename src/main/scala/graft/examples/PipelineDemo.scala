@@ -26,7 +26,7 @@ object PipelineDemo {
     * fingerprint columns added).
     */
   def cleanCorpus(s: SparkSession, sf: String,
-      // required, not defaulted: the shingle cache inside jaccardPairs is
+      // required, not defaulted: the pair-edge cache of clusterEdges is
       // reachable only through this handle — a silently-discarded default
       // Tracked would be exactly the unreleasable pinned block the
       // ownership contract exists to prevent

@@ -432,7 +432,8 @@ case class SumUnscaled128Dec(child: Expression)
   * decimal(38)'s 1e38 — this cannot overflow where the old form
   * succeeded), and the final conversion applies the same nearest-even
   * BigDecimal→double rounding as Cast(decimal AS DOUBLE). Null rows
-  * (either side) are skipped, exactly like the built-in Sum over a
+  * (either side, or a non-double cast that overflows to null outside
+  * ANSI mode) are skipped, exactly like the built-in Sum over a
   * null-propagating product.
   */
 case class SumUnscaledProduct(left: Expression, right: Expression,
@@ -493,7 +494,11 @@ case class SumUnscaledProduct(left: Expression, right: Expression,
     val plo = wmul(ux, uy)
     val loNew = wadd(lo, plo)
     val hiNew = wadd(wadd(hi, phi), carryOut(lo, plo, loNew))
-    val anyNull = Or(IsNull(left), IsNull(right))
+    // a null child OR a null unscaled value skips the row: a non-double
+    // child's Cast to DECIMAL(18,s) nulls on overflow outside ANSI mode,
+    // and a null product must never reach the non-nullable hi/lo slots
+    // (Tungsten reads a nulled slot back as 0, resetting the sum)
+    val anyNull = Seq(left, right, ux, uy).map(IsNull(_): Expression).reduce(Or(_, _))
     Seq(
       If(anyNull, hi, hiNew),
       If(anyNull, lo, loNew),

@@ -12,8 +12,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   *
   *  - Below `distributedMinEdges` the (src, dst, w) frame — already
   *    topology-bounded by the caller's weight aggregate — is collected
-  *    once, sorted by (src, dst) so float summation order is
-  *    partition-layout independent, and the rounds are driver arithmetic.
+  *    once by the bounded collect that also picks the branch
+  *    ([[PageRank.edgesBelow]]), sorted by (src, dst) so float summation
+  *    order is partition-layout independent, and the rounds are driver
+  *    arithmetic.
   *  - At or above the gate, per round: one equi-join of the score frame
   *    against the persisted edge frame + one map-side-combined sum per
   *    endpoint, then an L2 norm as a 1-row broadcast scalar (the
@@ -33,23 +35,18 @@ object Hits {
   def run(nodes: DataFrame, edges: DataFrame, iters: Int,
       distributedMinEdges: Long = 500000L): DataFrame = {
     val s = nodes.sparkSession
-    val tr = new Tracked
-    val e = tr.persist(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("w").cast("long").as("w")))
-    val n = tr.persist(nodes.select(col("node").cast("long").as("node")))
-    val eCnt = e.count()
-    if (eCnt < distributedMinEdges) {
-      val out = driverPath(s, n, e, iters)
-      tr.free()
-      out
-    } else distributedPath(s, n, e, iters, tr)
+    val e = PageRank.longEdges(edges)
+    val n = nodes.select(col("node").cast("long").as("node"))
+    PageRank.edgesBelow(e, distributedMinEdges) match {
+      case Some(es) => driverPath(s, n, es, iters)
+      case None =>
+        val tr = new Tracked
+        distributedPath(s, tr.persist(n), tr.persist(e), iters, tr)
+    }
   }
 
   private def driverPath(s: org.apache.spark.sql.SparkSession,
-      nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    val es = edges.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(t => (t._1, t._2))
+      nodes: DataFrame, es: Array[(Long, Long, Long)], iters: Int): DataFrame = {
     val ns = nodes.collect().map(_.getLong(0)).sorted
     var h = ns.map(_ -> 1.0).toMap
     var a = Map.empty[Long, Double]

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   *
   *  - Below `distributedMinEdges`, the (src, dst, w) edge frame — already
   *    reduced from the corpus by the caller's weight aggregate, so bounded
-  *    by topology, not data volume — is collected ONCE, sorted by
+  *    by topology, not data volume — is collected ONCE (the same bounded
+  *    collect that picks the branch; see [[PageRank.edgesBelow]]), sorted by
   *    (src, dst) so float summation order is partition-layout independent,
   *    and the 10 rounds run as driver arithmetic: zero further jobs. This
   *    is the Components union-find / CAIM histogram move: when the reduced
@@ -40,25 +41,43 @@ object PageRank {
   def run(nodes: DataFrame, edges: DataFrame, iters: Int, damping: Double,
       distributedMinEdges: Long = 500000L): DataFrame = {
     val s = nodes.sparkSession
-    val tr = new Tracked
-    val e = tr.persist(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("w").cast("long").as("w")))
-    val n = tr.persist(nodes.select(col("node").cast("long").as("node")))
-    val eCnt = e.count()
-    if (eCnt < distributedMinEdges) {
-      val out = driverPath(s, n, e, iters, damping)
-      tr.free() // driver path holds no frame references past the collects
-      out
-    } else distributedPath(s, n, e, iters, damping, tr)
+    val e = longEdges(edges)
+    val n = nodes.select(col("node").cast("long").as("node"))
+    edgesBelow(e, distributedMinEdges) match {
+      case Some(es) => driverPath(s, n, es, iters, damping)
+      case None =>
+        val tr = new Tracked
+        distributedPath(s, tr.persist(n), tr.persist(e), iters, damping, tr)
+    }
   }
 
+  /** (src, dst, w) cast to long — the edge shape both operators iterate. */
+  private[operators] def longEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
+
+  /** The size dispatch of [[PageRank]] and [[Hits]]: the (src, dst, w)
+    * rows, sorted by (src, dst), when fewer than `gate` exist — else None.
+    * ONE bounded collect both picks the branch and feeds the driver path,
+    * so no edge frame is cached or counted first. The (src, dst) sort
+    * makes the driver's fold order — and so its float sums — independent
+    * of partition layout (the vec_id-ordered-sample rule). `limit` takes
+    * an Int: a gate past Int.MaxValue collects at most Int.MaxValue rows,
+    * and a graph that fills them takes the distributed branch. */
+  private[operators] def edgesBelow(e: DataFrame,
+      gate: Long): Option[Array[(Long, Long, Long)]] =
+    if (gate <= 0L) None
+    else {
+      val cap = math.min(gate, Int.MaxValue.toLong).toInt
+      val rows = e.limit(cap).collect()
+      if (rows.length >= cap) None
+      else Some(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .sortBy(t => (t._1, t._2)))
+    }
+
   private def driverPath(s: org.apache.spark.sql.SparkSession,
-      nodes: DataFrame, edges: DataFrame, iters: Int, damping: Double): DataFrame = {
-    // (src, dst) sort makes the fold order — and so the float sums —
-    // independent of partition layout (the vec_id-ordered-sample rule)
-    val es = edges.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(t => (t._1, t._2))
+      nodes: DataFrame, es: Array[(Long, Long, Long)], iters: Int,
+      damping: Double): DataFrame = {
     val ns = nodes.collect().map(_.getLong(0)).sorted
     val nN = ns.length.toDouble
     val tw = es.groupBy(_._1).map { case (src, g) => src -> g.map(_._3).sum }

@@ -15,6 +15,13 @@ import org.apache.spark.storage.StorageLevel
   * actions never re-run the pipeline) and is registered as `owned`; callers
   * free it with `release()` (or `Dataset.unpersist` / the session's cache
   * manager) once consumed. Intermediates are never the caller's problem.
+  *
+  * Persisting a frame that sits right after a shuffle pins all
+  * `spark.sql.shuffle.partitions` of its partitions: AQE cannot coalesce a
+  * cached plan's output (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
+  * is off by default), so every reader of that cache schedules one task
+  * per partition, however small the data. A pipeline that needs no cache
+  * is better left a lazy plan — see [[sealIfHeld]].
   */
 final class Tracked {
   private var kept: List[DataFrame] = Nil
@@ -41,11 +48,18 @@ final class Tracked {
 
   /** Eagerly materialize `result` (persist + count — downstream actions read
     * the cache, so the pipeline runs exactly once), then free every tracked
-    * intermediate. Seal the UNSORTED result and sort after: sealing a
-    * global-sort plan would pay the range-partition sampling job, which
-    * recomputes the unsorted child a second time.
+    * intermediate. Seal the UNSORTED result and sort after, so the eager
+    * count does not pay for a global sort (its exchange and range sample)
+    * that only the final reader needs.
     */
   def seal(result: DataFrame): DataFrame = sealCounted(result)._1
+
+  /** [[seal]] when some intermediate is tracked (the result's plan reads
+    * caches that must be freed); otherwise return `result` untouched — a
+    * plan that persisted nothing stays lazy, with no eager job and no
+    * pinned block. */
+  def sealIfHeld(result: DataFrame): DataFrame =
+    if (synchronized(kept.isEmpty)) result else seal(result)
 
   /** [[seal]], returning the materialization count too — the row count the
     * eager count() already pays for, surfaced so callers dispatching on

@@ -104,28 +104,11 @@ object Llm {
     * `dedup_jaccard` (rounded + ordered for the oracle) and
     * `dedup_clusters` (edge stream; feeding the SAME pair frame to
     * [[graft.operators.Components]] means the expensive shingle self-join
-    * runs exactly once — and without the oracle's global sort, whose
-    * range-partition sampling job would compute the join a second time).
-    *
-    * The inverted-index self-join keys on xxhash64(shingle) — a long
-    * hashes/partitions far cheaper than a ~20-char string. Semantics stay
-    * EXACT via a runtime-verified hash compaction: one cheap aggregate
-    * checks `countDistinct(shingle) == countDistinct(hash)` — when equal
-    * (always, in practice: P[any collision] ≈ d²/2⁶⁵ for d distinct
-    * shingles) the hash is injective ON THIS CORPUS and the join carries
-    * NO string payload at all; on a detected collision it falls back to
-    * string equality as a residual predicate. The same AQE-style
-    * runtime-statistics move `Sim.topK(auto)` makes — and at 100 TB,
-    * dropping ~20-byte strings from both sides of the dominant self-join
-    * shuffle is the difference that check pays for a million times over
-    * (measured at sf0.1: 2.3–3.1 s → 1.7–1.9 s for the join+count stage;
-    * the check itself costs ~0.1 s). Pair counts group on (da, db) only;
-    * the tiny per-doc sizes table joins onto the counted stream afterwards
-    * (at 100 TB that join is ∝ pairs, not corpus).
+    * runs exactly once). A lazy plan over [[pairIntersections]]: no
+    * eager job, no cached block.
     */
-  private[graft] def jaccardPairs(docsRaw: DataFrame, tau: Double,
-      tr: graft.operators.Tracked): DataFrame =
-    pairIntersections(docsRaw, tr)
+  private[graft] def jaccardPairs(docsRaw: DataFrame, tau: Double): DataFrame =
+    pairIntersections(docsRaw)
       .withColumn("jac", col("i").cast("double") / (col("na") + col("nb") - col("i")))
       .where(col("jac") >= tau)
       .select(col("da"), col("db"), col("jac"))
@@ -149,57 +132,76 @@ object Llm {
     * ≥ 1 shared 3-shingle, as (da, db, na, nb, i) — |A|, |B|, |A∩B| from
     * the hash-compacted inverted-index self-join. [[jaccardPairs]] maps it
     * to symmetric Jaccard; `dedup_containment` maps it to the ASYMMETRIC
-    * containment pair (Broder 1997's r(A,B) = |A∩B|/|A|). */
+    * containment pair (Broder 1997's r(A,B) = |A∩B|/|A|). A lazy plan:
+    * no eager job, no cached block (see [[intersectionCounts]]). */
   private[graft] def pairIntersections(docsRaw: DataFrame,
-      tr: graft.operators.Tracked,
-      dfCap: Int = hotShingleDfCap): DataFrame = {
-    // persist the per-doc ARRAY table (one small row per doc), not the
-    // exploded rows: referencing size(ss) and explode(ss) over a computed
-    // column would make codegen re-derive the whole shingle transform per
-    // exploded row (~50× the work); over a cached column both are O(1)
-    val docs = tr.persist(shingleArrays(docsRaw))
-    // the per-doc shingle count rides the exploded rows (8 bytes) and is
-    // grouped alongside the pair, so NO post-aggregation joins against a
-    // sizes table are needed — the candidate-pair stream (orders of
-    // magnitude larger than the final pair set; 1.1M vs 256 at sf0.1)
-    // goes straight from the count aggregate into the jac filter. Same
-    // move dedup_minhash's exact scorer makes.
-    val shS = docs.select(col("doc_id"), size(col("ss")).cast("long").as("n"),
+      dfCap: Int = hotShingleDfCap): DataFrame =
+    intersectionCounts(hashedShingles(docsRaw), dfCap)
+
+  /** Per-doc distinct 3-gram shingles, exploded and hashed:
+    * (doc_id, n, s, h) with n = the doc's distinct-shingle count and
+    * h = xxhash64(s). The count rides the exploded rows (8 bytes) and is
+    * grouped alongside the pair, so NO post-aggregation join against a
+    * sizes table is needed — the candidate-pair stream (orders of
+    * magnitude larger than the final pair set; 1.1M vs 256 at sf0.1) goes
+    * straight from the count aggregate into the jac filter. */
+  private[graft] def hashedShingles(docsRaw: DataFrame): DataFrame =
+    shingleArrays(docsRaw)
+      .select(col("doc_id"), size(col("ss")).cast("long").as("n"),
         explode(col("ss")).as("s"))
-      .select(col("doc_id"), col("n"), col("s"), xxhash64(col("s")).as("h"))
-    // ONE corpus-pass per-hash aggregate serves BOTH runtime decisions
-    // (r18 — guide §1.2 "don't compute things twice"): document frequency
-    // for the df-cap AND the hash-injectivity check. The old shape paid
-    // two full corpus passes — a countDistinct(s)/countDistinct(h) pair
-    // (which plans as an Expand that doubles and shuffles every exploded
-    // shingle STRING) plus the groupBy(h) df count. Injectivity per hash
-    // is min(s) != max(s) — h is a function of s, so countDistinct
-    // equality and per-hash-single-preimage are the same predicate — and
-    // the probe runs over the persisted per-hash frame (|distinct
-    // shingles| rows), not the corpus.
-    val dfs = tr.persist(shS.groupBy("h").agg(count(lit(1)).as("df"),
-        min(col("s")).as("__mn"), max(col("s")).as("__mx"))
+      .withColumn("h", xxhash64(col("s")))
+
+  /** Pair intersection counts over a (doc_id, n, s, h) shingle frame.
+    *
+    * The inverted-index self-join keys on the 64-bit hash h — a long
+    * hashes and compares far cheaper than a ~20-char string — and stays
+    * EXACT through a per-hash injectivity flag resolved inside the plan:
+    * the rows are shuffled ONCE by h, and window aggregates over that
+    * partitioning give each hash its document frequency and the min/max
+    * of its preimage strings. Where min = max (always, in practice:
+    * P[any collision] ≈ d²/2⁶⁵ for d distinct shingles) the hash has one
+    * preimage and the string is nulled; where a collision is detected the
+    * string stays, and a string-equality residual splits the colliding
+    * shingles. The self-join then reads the same h-partitioning, so no
+    * further exchange runs before the pair count.
+    *
+    * The df-cap (see [[hotShingleDfCap]]) filters on the same window's
+    * document frequency — (doc_id, h) is unique by construction (ss is
+    * array_distinct), so count(*) per h IS document frequency. How many
+    * hash types the cap excluded surfaces through an observed metric
+    * (one row per type: the type's min-doc_id row), WARN-logged by the
+    * once-per-session [[HotShingleObserver]] listener; no driver action
+    * runs for either decision. Blind spot: when the cap leaves no
+    * candidate pair at all, AQE's empty-relation propagation prunes the
+    * stage that carries the metric, and nothing is logged.
+    *
+    * The self-join carries a `shuffle_hash` hint: its build side is
+    * corpus-proportional, and a runtime broadcast of it keeps the whole
+    * relation alive on the driver (the rule [[graft.ml.Sim.cosinePairs]]
+    * follows for the same reason). */
+  private[graft] def intersectionCounts(sh: DataFrame, dfCap: Int): DataFrame = {
+    HotShingleObserver.ensure(sh.sparkSession)
+    val byH = Window.partitionBy("h")
+    val flagged = sh
+      .withColumn("df", count(lit(1)).over(byH))
+      .withColumn("__mn", min(col("s")).over(byH))
+      .withColumn("__mx", max(col("s")).over(byH))
+      .withColumn("__d0", min(col("doc_id")).over(byH))
       .observe(HotShingleObserver.nextMetricName(),
-        sum(when(col("df") > dfCap, 1L).otherwise(0L)).as("n_hot"),
-        max(lit(dfCap.toLong)).as("df_cap")))
-    HotShingleObserver.ensure(docsRaw.sparkSession)
-    val collided = !dfs.where(col("__mn") =!= col("__mx")).isEmpty
-    val shAll = if (collided) shS else shS.drop("s")
-    // df-cap on hot shingles (see [[hotShingleDfCap]]): (doc_id, h) is
-    // unique by construction (ss is array_distinct), so count(*) per h IS
-    // document frequency. The left_anti exclusion is UNCONDITIONAL — no
-    // blocking driver count() runs on the hot path for the CAP itself;
-    // when nothing is hot AQE's empty-relation propagation deletes the
-    // anti-join at runtime, and the bound count surfaces through an
-    // observed metric WARN-logged by a once-per-session listener.
-    val hot = dfs.where(col("df") > dfCap).select("h")
-    val sh = shAll.join(hot, Seq("h"), "left_anti")
-    val joinCond =
-      if (collided)
-        col("a.h") === col("b.h") && col("a.s") === col("b.s") &&
-          col("a.doc_id") < col("b.doc_id")
-      else col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id")
-    sh.as("a").join(sh.as("b"), joinCond)
+        sum(when(col("df") > dfCap && col("doc_id") === col("__d0"), 1L)
+          .otherwise(0L)).as("n_hot"),
+        max(lit(dfCap.toLong)).as("df_cap"))
+      .where(col("df") <= dfCap)
+      .select(col("doc_id"), col("n"), col("h"),
+        when(col("__mn") =!= col("__mx"), col("s")).as("s"))
+    // the string test is written as a residual, not as `<=>`: an equality
+    // would become a second join key, and co-partitioning on (h, s) would
+    // re-shuffle both sides with the strings. Both sides of a bucket share
+    // the flag, so null = null (one preimage) passes through coalesce
+    flagged.as("a").join(flagged.as("b").hint("shuffle_hash"),
+        col("a.h") === col("b.h") &&
+          coalesce(col("a.s") === col("b.s"), lit(true)) &&
+          col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
         col("a.n").as("na"), col("b.n").as("nb"))
       .agg(count(lit(1)).as("i"))
@@ -274,7 +276,7 @@ object Llm {
     // memoized dispatch count (see Sim.countOnce): dedup_jaccard /
     // dedup_clusters / dedup_survivors / contamination bind this kernel
     // to the same documents scan — one count job serves them all
-    if (graft.ml.Sim.countOnce(docsRaw) < lshThreshold) jaccardPairs(docsRaw, tau, tr)
+    if (graft.ml.Sim.countOnce(docsRaw) < lshThreshold) jaccardPairs(docsRaw, tau)
     else {
       val docs = tr.persist(shingleArrays(docsRaw))
       val cand = minhashCandidates(docs, nBands = 8, rowsPerBand = 2,
@@ -354,11 +356,13 @@ object Llm {
     // exact n-gram (3-shingle) Jaccard near-dup pairs, tau = 0.5 (kernel:
     // [[jaccardPairsAuto]] — exact inverted-index at this corpus size,
     // size-gated swap to banded-LSH candidates + exact re-rank at scale).
-    // Sealed BEFORE the oracle's global sort so the range-partition
-    // sampling job reads the cache instead of re-running the self-join.
+    // The exact path is one lazy plan: under AQE the oracle sort's
+    // range-partition sample reads the pair aggregate's materialized
+    // shuffle, so the self-join runs once with nothing cached; only the
+    // LSH path, which persists its shingle and band tables, is sealed.
     "dedup_jaccard" -> ((s, sf) => {
       val tr = new graft.operators.Tracked
-      tr.seal(jaccardPairsAuto(t(s, sf, "documents"), 0.5, tr)
+      tr.sealIfHeld(jaccardPairsAuto(t(s, sf, "documents"), 0.5, tr)
           .select(col("da"), col("db"), round(col("jac"), 6).as("jac")))
         .orderBy("da", "db")
     }),
@@ -381,16 +385,14 @@ object Llm {
     // exists for — so at true scale the knob is a df-cap on hot
     // shingles (the text_boilerplate move) or the dedup_spans suffix
     // machinery, never banding.
-    "dedup_containment" -> ((s, sf) => {
-      val tr = new graft.operators.Tracked
-      tr.seal(pairIntersections(t(s, sf, "documents"), tr)
-          .select(expr("""inline(array(
-            struct(da AS src, db AS dst, cast(i AS double)/na AS c),
-            struct(db AS src, da AS dst, cast(i AS double)/nb AS c)))"""))
-          .where(col("c") >= 0.8)
-          .select(col("src"), col("dst"), round(col("c"), 6).as("containment")))
-        .orderBy("src", "dst")
-    }),
+    "dedup_containment" -> ((s, sf) =>
+      pairIntersections(t(s, sf, "documents"))
+        .select(expr("""inline(array(
+          struct(da AS src, db AS dst, cast(i AS double)/na AS c),
+          struct(db AS src, da AS dst, cast(i AS double)/nb AS c)))"""))
+        .where(col("c") >= 0.8)
+        .select(col("src"), col("dst"), round(col("c"), 6).as("containment"))
+        .orderBy("src", "dst")),
 
     // MinHash-LSH near-dup pairs (capability row: hash-seed dependent, no
     // cross-engine oracle; tests assert candidates ⊇ dedup_jaccard pairs).
@@ -507,7 +509,7 @@ object Llm {
       val tr = new graft.operators.Tracked
       val docs = t(s, sf, "documents")
       val pairs = tr.persist(
-        jaccardPairs(docs, 0.5, tr).select(col("da"), col("db")))
+        jaccardPairs(docs, 0.5).select(col("da"), col("db")))
       val clusters = graft.operators.Components
         .connected(pairs, "da", "db", tr)
       val scored = docs.select(col("doc_id"),

@@ -228,6 +228,33 @@ class ExactSumSpec extends AnyFunSuite with SparkFixture {
         col("y").cast(DecimalType(18, 2))).cast("double")).head.getDouble(0))
   }
 
+  test("dxsum skips a long whose DECIMAL(18,s) cast overflows to null, " +
+    "like the built-in, instead of resetting the sum") {
+    // outside ANSI mode CAST(x AS DECIMAL(18,2)) nulls for |x| ≥ 1e16; the
+    // built-in sum skips that row's null product. One partition, overflow
+    // row in the middle: a reset would drop every row before it
+    val ansiBefore = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val df = spark.range(0, 100, 1, 1).select(
+        when(col("id") === 50, lit(100000000000000000L))
+          .otherwise(col("id")).as("x"),
+        (col("id") + 1).as("y"))
+      val got = df.agg(T.dxsum(col("x"), col("y"), 2, 0)).head.getDouble(0)
+      val want = df.agg(builtinX(col("x"), col("y"), 2, 0)).head.getDouble(0)
+      assert(got == want)
+      assert(want == (0 until 100).filter(_ != 50).map(i => i * (i + 1.0)).sum)
+      // every row overflowing leaves nothing summed: NULL, like the built-in
+      val all = spark.range(0, 4, 1, 1)
+        .select((col("id") + 100000000000000000L).as("x"), col("id").as("y"))
+      assert(all.agg(T.dxsum(col("x"), col("y"), 2, 0)).head.isNullAt(0))
+      assert(all.agg(builtinX(col("x"), col("y"), 2, 0)).head.isNullAt(0))
+    } finally ansiBefore match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   // --- r19: graft_dsumd (decimal-output 128-bit sum) ---
 
   test("dsumd == built-in decimal(38) sum: exact values, exact TYPE, " +

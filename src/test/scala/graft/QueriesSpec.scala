@@ -324,8 +324,7 @@ class QueriesSpec extends AnyFunSuite with SparkFixture with Matchers {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("da"), col("db"), round(col("jac"), 6))
         .collect().map(_.toString).toSet
-    val trA = new graft.operators.Tracked
-    val exact = rows(graft.queries.Llm.jaccardPairs(docs, 0.5, trA))
+    val exact = rows(graft.queries.Llm.jaccardPairs(docs, 0.5))
     val trB = new graft.operators.Tracked
     val lsh = rows(graft.queries.Llm.jaccardPairsAuto(docs, 0.5, trB,
       lshThreshold = 1))
@@ -341,11 +340,9 @@ class QueriesSpec extends AnyFunSuite with SparkFixture with Matchers {
     val b = a + " eta theta iota kappa lambda mu nu xi omicron pi rho " +
       "sigma tau upsilon phi chi psi omega one two three four five six"
     val docs = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    val tr = new graft.operators.Tracked
-    val pi = graft.queries.Llm.pairIntersections(docs, tr)
+    val pi = graft.queries.Llm.pairIntersections(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
-    tr.free()
     pi.length shouldBe 1
     val (da, db, na, nb, i) = pi.head
     (da, db) shouldBe (1L, 2L)
@@ -425,12 +422,9 @@ class QueriesSpec extends AnyFunSuite with SparkFixture with Matchers {
     // leg 1: the default cap never binds at bench SF — pair set identical
     // to the uncapped kernel (hence the oracles need no cap clause)
     val docs = graft.T.t(spark, sf001, "documents")
-    def pairs(cap: Int) = {
-      val tr = new graft.operators.Tracked
-      val r = graft.queries.Llm.pairIntersections(docs, tr, dfCap = cap)
+    def pairs(cap: Int) =
+      graft.queries.Llm.pairIntersections(docs, dfCap = cap)
         .collect().map(_.toString).toSet
-      tr.free(); r
-    }
     pairs(graft.queries.Llm.hotShingleDfCap) shouldBe pairs(Int.MaxValue)
 
     // leg 2: a shingle shared by MORE docs than the cap is excluded —
@@ -438,18 +432,57 @@ class QueriesSpec extends AnyFunSuite with SparkFixture with Matchers {
     val boiler = "click here to subscribe"
     val hotDocs = (1L to 12L).map(i =>
       (i, s"$boiler unique$i filler$i tail$i")).toDF("doc_id", "text")
-    val tr = new graft.operators.Tracked
-    val capped = graft.queries.Llm.pairIntersections(hotDocs, tr, dfCap = 8)
+    val capped = graft.queries.Llm.pairIntersections(hotDocs, dfCap = 8)
       .collect()
-    tr.free()
     // the only shared shingles ride the boilerplate prefix (df = 12 > 8);
     // with them excluded no pair shares anything
     capped shouldBe empty
-    val tr2 = new graft.operators.Tracked
-    val uncapped = graft.queries.Llm.pairIntersections(hotDocs, tr2,
+    // the observed metric counts excluded shingle TYPES (the two
+    // boilerplate 3-grams), not their 24 (doc, shingle) rows. Two more
+    // docs keep one organic pair alive: when the cap leaves no pair at
+    // all, AQE prunes the stage that carries the metric
+    val mixed = graft.queries.Llm.pairIntersections(hotDocs.union(Seq(
+      (100L, "alpha beta gamma delta"),
+      (101L, "alpha beta gamma epsilon")).toDF("doc_id", "text")), dfCap = 8)
+    mixed.collect().map(r => (r.getLong(0), r.getLong(1))) shouldBe
+      Array((100L, 101L))
+    val hot = mixed.queryExecution.observedMetrics.collect {
+      case (k, row) if k.startsWith(
+          graft.queries.Llm.HotShingleObserver.MetricPrefix) =>
+        row.getAs[Long]("n_hot")
+    }
+    hot.toSeq shouldBe Seq(2L)
+    val uncapped = graft.queries.Llm.pairIntersections(hotDocs,
       dfCap = Int.MaxValue).collect()
-    tr2.free()
     uncapped.length shouldBe 12 * 11 / 2
+  }
+
+  test("hash-collision path: two shingles sharing one hash still count " +
+      "as different shingles") {
+    import spark.implicits._
+    // hand-built (doc_id, n, s, h) rows: "x y z" and "p q r" are forced
+    // onto the same h = 7, so only the in-plan injectivity flag keeps
+    // them apart; "k l m" (h = 9) is a collision-free shared shingle
+    val sh = Seq(
+      (1L, 2L, "x y z", 7L), (1L, 2L, "k l m", 9L),
+      (2L, 2L, "p q r", 7L), (2L, 2L, "k l m", 9L),
+      (3L, 2L, "x y z", 7L), (3L, 2L, "p q r", 7L),
+      (4L, 1L, "x y z", 7L)).toDF("doc_id", "n", "s", "h")
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.select("da", "db", "i").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    // string-keyed reference: the same self-join with s as the key
+    val byString = sh.as("a").join(sh.as("b"),
+        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
+      .agg(count(lit(1)).as("i"))
+    val got = counts(graft.queries.Llm.intersectionCounts(sh,
+      graft.queries.Llm.hotShingleDfCap))
+    got shouldBe counts(byString)
+    // the hash alone would have merged the two shingles: (1, 2) shares
+    // only "k l m", not the colliding pair
+    got((1L, 2L)) shouldBe 1L
+    got((1L, 3L)) shouldBe 1L
   }
 
   test("caim_fit emits per-feature strictly-increasing boundary arrays") {
@@ -583,10 +616,14 @@ class QueriesSpec extends AnyFunSuite with SparkFixture with Matchers {
     }
   }
 
-  test("jaccard self-join shuffles no string payload under hash compaction") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+  test("jaccard kernel shuffles its shingle rows once; the self-join " +
+      "adds no exchange") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
     import org.apache.spark.sql.types.StringType
-    val tr = new graft.operators.Tracked
     // AQE off for the inspection: AdaptiveSparkPlanExec hides its input
     // plan from collect(), and sparkPlan predates EnsureRequirements (no
     // Exchange nodes exist there at all)
@@ -596,24 +633,32 @@ class QueriesSpec extends AnyFunSuite with SparkFixture with Matchers {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val pairs = graft.queries.Llm.jaccardPairs(
-        T.t(spark, sf001, "documents"), 0.5, tr)
-      // every shuffle in the kernel carries only longs/doubles — the
-      // ~20-byte shingle strings never cross an exchange once the runtime
-      // bijection check passes (the whole point of the compaction; on
-      // real corpora this is the dominant shuffle)
-      val exchanges = pairs.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec => e
+        T.t(spark, sf001, "documents"), 0.5)
+      val plan = pairs.queryExecution.executedPlan
+      // the injectivity check compares shingle strings, so exactly one
+      // exchange carries them: the shuffle of the exploded rows by h
+      val stringy = plan.collect {
+        case e: ShuffleExchangeExec
+            if e.output.exists(_.dataType == StringType) => e
       }
-      exchanges should not be empty
-      exchanges.foreach { e =>
-        withClue(s"exchange ${e.output.map(_.name)}: ") {
-          e.output.exists(_.dataType == StringType) shouldBe false
+      stringy should have length 1
+      stringy.head.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name shouldBe "h"
+        case other => fail(s"expected hash partitioning on h, got $other")
+      }
+      // the self-join (shuffle_hash, never a corpus-sized broadcast) reads
+      // that partitioning on both sides — one side reuses the exchange —
+      // so the dominant join adds no shuffle of its own
+      val joins = plan.collect { case j: ShuffledHashJoinExec => j }
+      joins should have length 1
+      joins.head.children.foreach { side =>
+        val ex = side.collect {
+          case e: ShuffleExchangeExec => e
+          case r: ReusedExchangeExec => r
         }
+        ex should have length 1
       }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      tr.release()
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
 
   test("count-min heavy hitters obey the epsilon-overestimate guarantee") {

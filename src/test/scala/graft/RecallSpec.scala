@@ -75,10 +75,9 @@ class RecallSpec extends AnyFunSuite with SparkFixture with Matchers {
 
   test("banded MinHash-LSH jaccard recall vs exact tau=0.5 pairs at sf0.1") {
     val docs = T.t(spark, sf01, "documents")
-    val tr1 = new graft.operators.Tracked
     val tr2 = new graft.operators.Tracked
     try {
-      val exact = graft.queries.Llm.jaccardPairs(docs, 0.5, tr1)
+      val exact = graft.queries.Llm.jaccardPairs(docs, 0.5)
         .select("da", "db")
       // lshThreshold=1 forces the banded path the 100 TB corpus would take
       val banded = graft.queries.Llm.jaccardPairsAuto(docs, 0.5, tr2,
@@ -88,7 +87,7 @@ class RecallSpec extends AnyFunSuite with SparkFixture with Matchers {
       // banding curve 1-(1-j^2)^8 ~= 0.90 at j=0.5 exactly; most true
       // pairs sit well above the threshold where the curve saturates
       r should be >= 0.85
-    } finally { tr1.free(); tr2.free() }
+    } finally tr2.free()
   }
 
   test("IVF recall floor at the composed 10x corpus under sqrt(n) sizing " +

@@ -461,10 +461,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture with Matchers {
     val docsDf = T.t(spark, sf001, "documents")
     val docs = docsDf.select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1)))
-    val tr = new graft.operators.Tracked
-    val exact = graft.queries.Llm.jaccardPairs(docsDf, 0.5, tr)
+    val exact = graft.queries.Llm.jaccardPairs(docsDf, 0.5)
       .select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    tr.release()
     exact should not be empty
     // split a known near-dup pair ACROSS batches: finding it requires the
     // bucket state to carry batch-1 membership into batch 2

@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * commits — "publish `content` at `dst` iff nothing is there, exactly one
   * winner per slot" — factored out (round 14, r13 verdict item 3) so the
   * protocol can run on stores WITHOUT an atomic fail-on-existing rename.
+  * It is called from two loops only: ManifestTable's publish loop, which
+  * every table write goes through, and Catalog's pointer publish.
   *
   * [[RenameCas]] is the original primitive: write a temp file, rename it
   * onto the version slot; on HDFS and local file:// a rename onto an

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal manifest-swap commit protocol over plain parquet — the atomic
   * layer Upsert/Compact/partition-overwrite were missing (round-10 verdict
@@ -24,23 +25,30 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *    version and read exactly its file list — they can never observe a
   *    partial commit, and time travel is just reading an older manifest.
   *
-  * Conflict scoping (r12, verdict item 5): a read-modify-write transaction
-  * passes `readVersion` — the snapshot it computed against — and `commit`
-  * validates it against the head on every CAS attempt, Delta/Iceberg's
-  * optimistic conflict check over the read-set the manifests already
-  * record:
+  * Every write publishes through one loop, [[transact]] — the single
+  * action-log commit of the Delta protocol. Each attempt lists the
+  * versions, loads the head manifest once, applies the write's conflict
+  * rule, builds the next manifest from that head and claims slot
+  * head + 1. The conflict rule follows from what the write READ — the
+  * optimistic check over the read-set the manifests already record:
   *
-  *  - `replace` + head moved past `readVersion` → the transaction's output
-  *    was derived from a snapshot someone else has since changed; blindly
-  *    swapping would silently discard their commit (the LOST UPDATE
-  *    anomaly). The commit throws; the caller re-reads the new head,
-  *    recomputes, retries.
-  *  - append + head moved → appends commute, so the commit proceeds
-  *    UNLESS the files the transaction read are no longer all present in
-  *    the head (a concurrent replace/compact rewrote them) — appending
-  *    rows derived from retracted data would resurrect it.
-  *  - `readVersion = -1` (default) opts out: blind appends/replaces
-  *    serialize optimistically exactly as before.
+  * | Read kind  | Operations | On conflict |
+  * |------------|------------|-------------|
+  * | `Blind`    | [[commit]] with `readVersion = -1` (the default), [[optimize]], [[restore]], [[clone]] | never conflicts; re-base on the new head and retry on a lost slot |
+  * | `Files(v)` | append with `readVersion = v` | conflict iff `files(v)` ⊄ `files(head)`; v must still be committed (or be 0, the empty table) |
+  * | `Exact(v)` | replace with `readVersion = v`, [[deleteWhere]], [[upsertMor]], each of the two [[deleteThenUpsertMor]] publishes | conflict iff head ≠ v |
+  *
+  * Appends commute, but one whose read files a concurrent replace/compact
+  * retracted would resurrect them through the rows it derived. A replace
+  * swapped in over a moved head silently discards the concurrent commit
+  * (the LOST UPDATE anomaly), and recorded delete positions may name
+  * files a concurrent writer replaced. A no-match upsertMor stays Exact:
+  * it read the keys of the whole table, so a concurrent append could
+  * otherwise create duplicate keys.
+  *
+  * A conflict throws [[java.util.ConcurrentModificationException]] after
+  * deleting the data and sidecars the write staged; the caller re-reads
+  * the head, recomputes and retries.
   *
   * Transactions spanning tables live one layer up in [[Catalog]] (r13),
   * which pins `table -> version` in a catalog pointer file committed by
@@ -56,7 +64,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 object ManifestTable {
 
   /** Marker file [[Catalog.commit]] stamps into member table dirs; its
-    * presence makes direct appends here fail fast (see [[commit]]). */
+    * presence makes direct appends here fail fast (see [[guardCatalog]]). */
   private[operators] val CatalogManagedMarker = "_catalog_managed"
 
   /** File-skipping predicates evaluated against per-file min/max stats
@@ -101,15 +109,6 @@ object ManifestTable {
     * no prefix, so pre-16 manifests parse unchanged. */
   private val DeletePrefix = "delete:"
 
-  /** ALL manifest lines of version `v`, verbatim (data + delete entries) —
-    * what append commits, restore and clone must carry forward. */
-  private def manifestLines(fs: FileSystem, dir: String, v: Long): Seq[String] = {
-    val in = fs.open(new Path(manifestDir(dir), s"v$v.manifest"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
   /** Manifest header line pinning the TABLE SCHEMA (round 18): the rest
     * of the line is base64 of the StructType JSON. Written at first
     * commit; appends validate against it (name + TYPE) and refuse drift;
@@ -118,38 +117,138 @@ object ManifestTable {
     * validation — adopt a header via a replace commit). */
   private val SchemaPrefix = "schema:"
 
-  private def schemaLineOf(s: org.apache.spark.sql.types.StructType): String =
-    SchemaPrefix + b64(s.json)
+  private def schemaLineOf(s: StructType): String = SchemaPrefix + b64(s.json)
 
-  private def manifestSchemaOf(lines: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] =
-    lines.find(_.startsWith(SchemaPrefix)).map(l =>
-      org.apache.spark.sql.types.DataType
-        .fromJson(unb64(l.stripPrefix(SchemaPrefix)))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  /** One manifest version, read with one `open`: its verbatim lines (what
+    * appends, restore and clone carry forward) and the data files, delete
+    * sidecar paths and pinned schema (None on legacy headerless tables)
+    * derived from them. */
+  private final case class Snapshot(version: Long, lines: Seq[String]) {
+    lazy val files: Seq[String] = lines.filterNot(l =>
+      l.startsWith(DeletePrefix) || l.startsWith(SchemaPrefix))
+    lazy val deletes: Seq[String] =
+      lines.filter(_.startsWith(DeletePrefix)).map(_.stripPrefix(DeletePrefix))
+    lazy val header: Option[StructType] =
+      lines.find(_.startsWith(SchemaPrefix)).map(l =>
+        org.apache.spark.sql.types.DataType
+          .fromJson(unb64(l.stripPrefix(SchemaPrefix))).asInstanceOf[StructType])
+  }
 
-  /** The PINNED table schema of snapshot `version` (None on legacy
-    * headerless tables) — the contract every non-replace commit is
-    * validated against and every read resolves columns BY NAME under. */
-  def tableSchema(spark: SparkSession, dir: String, version: Long = -1L)
-      : Option[org.apache.spark.sql.types.StructType] = {
+  /** The head of a table that was never committed: version 0, no lines. */
+  private val NoSnapshot = Snapshot(0L, Nil)
+
+  private def snapshot(fs: FileSystem, dir: String, v: Long): Snapshot = {
+    val in = fs.open(new Path(manifestDir(dir), s"v$v.manifest"))
+    try Snapshot(v, scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .map(_.trim).filter(_.nonEmpty).toList)
+    finally in.close()
+  }
+
+  /** The snapshot of the newest of `vs` (a fresh [[versions]] listing). */
+  private def headOf(fs: FileSystem, dir: String, vs: Seq[Long]): Snapshot =
+    vs.lastOption.fold(NoSnapshot)(snapshot(fs, dir, _))
+
+  /** Snapshot `version` (negative: the head), which must be committed. */
+  private def snapshotAt(spark: SparkSession, dir: String,
+      version: Long): Snapshot = {
     val vs = versions(spark, dir)
     require(vs.nonEmpty, s"$dir has no committed snapshot")
     val v = if (version < 0) vs.last else version
     require(vs.contains(v), s"version $v not in committed set $vs")
-    manifestSchemaOf(manifestLines(fsOf(spark, dir), dir, v))
+    snapshot(fsOf(spark, dir), dir, v)
   }
 
-  /** DATA file entries of version `v` (delete sidecar and schema header
-    * lines excluded). */
-  private def manifestFiles(fs: FileSystem, dir: String, v: Long): Seq[String] =
-    manifestLines(fs, dir, v).filterNot(l =>
-      l.startsWith(DeletePrefix) || l.startsWith(SchemaPrefix))
+  /** What a write read, which picks its conflict rule (object doc). */
+  private sealed trait ReadSet
+  private case object Blind extends ReadSet
+  private final case class Files(v: Long) extends ReadSet
+  private final case class Exact(v: Long) extends ReadSet
 
-  /** Row-level delete sidecar paths of version `v`. */
-  private def manifestDeletes(fs: FileSystem, dir: String, v: Long): Seq[String] =
-    manifestLines(fs, dir, v).filter(_.startsWith(DeletePrefix))
-      .map(_.stripPrefix(DeletePrefix))
+  /** The one publish loop: every manifest version of a table is claimed
+    * here. Each attempt lists the versions, loads the head once, applies
+    * `read`'s conflict rule, builds the next manifest with `lines` and
+    * claims slot head + 1 through `cas`. The listing is always fresh: a
+    * slot must never be claimed from a listing taken before the write's
+    * data landed, because after [[expire]] a slot below the head can be
+    * empty again. The tmp name `.tmp-<id>-<next>` is deterministic per
+    * (writer, version), so a replay of a tagged commit clears its own torn
+    * tmp. A lost slot re-runs the attempt against the new head. Any
+    * failure before the claim — a conflict, or schema drift found against
+    * the new head — first deletes the table-relative `staged` paths: data
+    * and sidecars written for this publish that no manifest references.
+    */
+  private def transact(spark: SparkSession, dir: String, cas: CommitCas,
+      read: ReadSet, id: String, staged: Seq[String])
+      (lines: Snapshot => Seq[String]): Long = {
+    val fs = fsOf(spark, dir)
+    var committed = -1L
+    while (committed < 0) {
+      val (next, content) =
+        try {
+          val vs = versions(spark, dir)
+          if (vs.isEmpty) fs.mkdirs(manifestDir(dir))
+          val head = headOf(fs, dir, vs)
+          def moved(v: Long) = vs.nonEmpty && head.version != v
+          read match {
+            case Files(v) if moved(v) =>
+              require(vs.contains(v) || v == 0,
+                s"readVersion $v was never committed (or was expired " +
+                  s"mid-transaction) — cannot validate; committed set: $vs")
+              val gone =
+                if (v == 0) Set.empty[String]
+                else snapshot(fs, dir, v).files.toSet -- head.files
+              if (gone.nonEmpty)
+                throw new java.util.ConcurrentModificationException(
+                  s"append computed against v$v, but ${gone.size} of its " +
+                    s"files were rewritten by v${head.version} — appending " +
+                    "derived rows would resurrect retracted data; re-read " +
+                    "the head and recompute")
+            case Exact(v) if moved(v) =>
+              throw new java.util.ConcurrentModificationException(
+                s"write computed against v$v, but the head is " +
+                  s"v${head.version} — publishing would discard the " +
+                  "concurrent commit (lost update) or delete rows by stale " +
+                  "positions; re-read the head and recompute")
+            case _ =>
+          }
+          (head.version + 1, (lines(head).mkString("\n") + "\n")
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        } catch {
+          case e: Exception =>
+            staged.foreach(p => fs.delete(new Path(s"$dir/$p"), true))
+            throw e
+        }
+      if (cas.claim(fs, new Path(manifestDir(dir), s".tmp-$id-$next"),
+          new Path(manifestDir(dir), s"v$next.manifest"), content))
+        committed = next
+    }
+    committed
+  }
+
+  /** Refuse to publish behind [[Catalog.commit]] (r13 ADVICE). A table
+    * that has ever been written through the catalog carries the
+    * `_catalog_managed` marker, and its own head may sit past the last
+    * catalog-published version: a catalog transaction commits its
+    * per-table snapshots durably BEFORE the catalog CAS, so a conflict
+    * loser (or a crash before phase 2) leaves the head on a snapshot NO
+    * catalog version ever published. A write basing on that head would
+    * resurrect the orphaned data into a future catalog publish. Replaces
+    * stay allowed (they carry their own complete file list and cannot
+    * resurrect anything) — which is also what lets Catalog's own phase 1
+    * commit through [[commit]]. */
+  private def guardCatalog(fs: FileSystem, dir: String, what: String): Unit =
+    if (fs.exists(new Path(dir, CatalogManagedMarker)))
+      throw new IllegalStateException(
+        s"$dir is catalog-managed (it has been written through " +
+          s"Catalog.commit): $what may not publish a new manifest head " +
+          "behind the catalog. Publish through Catalog.commit.")
+
+  /** The PINNED table schema of snapshot `version` (None on legacy
+    * headerless tables) — the contract every non-replace commit is
+    * validated against and every read resolves columns BY NAME under. */
+  def tableSchema(spark: SparkSession, dir: String,
+      version: Long = -1L): Option[StructType] =
+    snapshotAt(spark, dir, version).header
 
   /** Manifest entries are table-relative by default; a SHALLOW CLONE
     * ([[clone]]) manifest lists the source's files absolutely. */
@@ -163,23 +262,23 @@ object ManifestTable {
     * batches that never committed (crashed writers) are invisible.
     */
   def read(spark: SparkSession, dir: String, version: Long = -1L): DataFrame = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"$dir has no committed snapshot")
-    val v = if (version < 0) vs.last else version
-    require(vs.contains(v), s"version $v not in committed set $vs")
-    val fs = fsOf(spark, dir)
-    val files = manifestFiles(fs, dir, v)
-    val header = manifestSchemaOf(manifestLines(fs, dir, v))
+    val s = snapshotAt(spark, dir, version)
+    scan(spark, dir, s, s.files)
+  }
+
+  /** `files` (entries of snapshot `s`) read under `s`'s pinned schema
+    * with its row-level deletes applied. With no file, a zero-file
+    * snapshot with a pinned schema still reads as a zero-row frame of the
+    * TABLE's columns; only a headerless one degrades to zero columns. */
+  private def scan(spark: SparkSession, dir: String, s: Snapshot,
+      files: Seq[String]): DataFrame =
     if (files.isEmpty)
-      // a zero-file snapshot with a pinned schema still reads as a
-      // zero-row frame of the TABLE's columns, never a zero-column frame
-      header.map(s => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
+      s.header.map(h => spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], h))
         .getOrElse(spark.emptyDataFrame)
     else
-      applyDeletes(spark, dir, manifestDeletes(fs, dir, v),
-        dataReader(spark, header).parquet(files.map(resolve(dir, _)): _*))
-  }
+      applyDeletes(spark, dir, s.deletes,
+        dataReader(spark, s.header).parquet(files.map(resolve(dir, _)): _*))
 
   /** Parquet reader for this table's data files: under a pinned schema
     * header, columns resolve BY NAME against each file's footer with
@@ -187,32 +286,67 @@ object ManifestTable {
     * streaming converter's contract applied to batch reads, so files
     * written before an `evolveSchema` commit surface the new columns as
     * NULL); headerless legacy tables keep footer inference. */
-  private def dataReader(spark: SparkSession,
-      header: Option[org.apache.spark.sql.types.StructType])
+  private def dataReader(spark: SparkSession, header: Option[StructType])
       : org.apache.spark.sql.DataFrameReader =
     header.map(spark.read.schema).getOrElse(spark.read)
 
-  /** Merge-on-read: anti-join `df` (a parquet scan of this table's files)
-    * against the snapshot's delete sidecars on (_metadata.file_path,
-    * _metadata.row_index). The delete side is O(deleted rows) and usually
-    * tiny (broadcast-able; AQE decides); no data file is ever rewritten
-    * until OPTIMIZE/replace materializes. A df that is NOT a direct file
-    * scan cannot resolve _metadata — callers pass the scan itself. */
+  /** Row-position columns [[withPositions]] adds to a scan. */
+  private val PosFile = "__graft_del_f"
+  private val PosRow = "__graft_del_p"
+
+  /** `scan` (a parquet scan of this table's files) with each row's
+    * (file, row-position) as [[PosFile]]/[[PosRow]], minus the positions
+    * the `dels` sidecars record — the merge-on-read anti-join. The meta
+    * columns are captured BEFORE the join: `_metadata` resolves only on
+    * the scan itself, not on derived frames. The delete side is
+    * O(deleted rows) and usually tiny (broadcast-able; AQE decides); no
+    * data file is ever rewritten until OPTIMIZE/replace materializes. */
+  private def withPositions(spark: SparkSession, dir: String, scan: DataFrame,
+      dels: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val meta = scan
+      .withColumn(PosFile, col("_metadata.file_path"))
+      .withColumn(PosRow, col("_metadata.row_index"))
+    if (dels.isEmpty) meta
+    else meta.join(spark.read.parquet(dels.map(resolve(dir, _)): _*)
+        .select(col("file").as(PosFile), col("pos").as(PosRow)),
+      Seq(PosFile, PosRow), "left_anti")
+  }
+
+  /** Merge-on-read: `df` (a direct parquet scan of this table's files)
+    * without the rows the snapshot's delete sidecars remove. */
   private def applyDeletes(spark: SparkSession, dir: String,
       dels: Seq[String], df: DataFrame): DataFrame =
     if (dels.isEmpty) df
-    else {
-      import org.apache.spark.sql.functions.col
-      val cols = df.columns
-      val withMeta = df
-        .withColumn("__graft_del_f", col("_metadata.file_path"))
-        .withColumn("__graft_del_p", col("_metadata.row_index"))
-      val delDf = spark.read.parquet(dels.map(resolve(dir, _)): _*)
-        .select(col("file").as("__graft_del_f"),
-          col("pos").as("__graft_del_p"))
-      withMeta.join(delDf, Seq("__graft_del_f", "__graft_del_p"), "left_anti")
-        .select(cols.map(col): _*)
-    }
+    else withPositions(spark, dir, df, dels)
+      .select(df.columns.toSeq.map(org.apache.spark.sql.functions.col): _*)
+
+  /** Write the (file, pos) of `rows` (a [[withPositions]] frame) as a new
+    * delete sidecar. Its row count rides the write job as an observed
+    * metric (r18) instead of a second job re-reading the sidecar; an empty
+    * sidecar is deleted again. Returns its table-relative path, or None
+    * when no row matched. The position set never lands on the driver. */
+  private def writeDeletes(fs: FileSystem, dir: String,
+      rows: DataFrame): Option[String] = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val rel = s"_deletes/${java.util.UUID.randomUUID()}.parquet"
+    val obs = new org.apache.spark.sql.Observation()
+    rows.select(col(PosFile).as("file"), col(PosRow).as("pos"))
+      .observe(obs, count(lit(1)).as("n"))
+      .write.parquet(s"$dir/$rel")
+    if (obs.get("n").asInstanceOf[Long] > 0L) Some(rel)
+    else { fs.delete(new Path(s"$dir/$rel"), true); None }
+  }
+
+  /** The DELETE publish: the positions of `rows` land as one sidecar
+    * appended to snapshot `base` (Exact). Nothing matched → `base`, and
+    * nothing published. */
+  private def publishDelete(spark: SparkSession, fs: FileSystem, dir: String,
+      cas: CommitCas, base: Long, rows: DataFrame): Long =
+    writeDeletes(fs, dir, rows).fold(base)(rel =>
+      transact(spark, dir, cas, Exact(base),
+        java.util.UUID.randomUUID().toString, Seq(rel))(
+        _.lines :+ s"$DeletePrefix$rel"))
 
   /** Row-level DELETE (round 16) — Delta deletion-vectors / Iceberg
     * position-deletes shape, merge-on-read: rows of the head snapshot
@@ -236,93 +370,17 @@ object ManifestTable {
     */
   def deleteWhere(spark: SparkSession, dir: String, pred: Column,
       cas: CommitCas = RenameCas): Long = {
-    import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, dir)
-    if (fs.exists(new Path(dir, CatalogManagedMarker)))
-      throw new IllegalStateException(
-        s"$dir is catalog-managed: deleteWhere may not publish a new " +
-          "manifest head behind the catalog. Publish through Catalog.commit.")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"$dir has no committed snapshot")
-    val v0 = vs.last
-    val files = manifestFiles(fs, dir, v0)
-    if (files.isEmpty) return v0
+    guardCatalog(fs, dir, "deleteWhere")
+    val base = snapshotAt(spark, dir, -1L)
+    if (base.files.isEmpty) return base.version
     // live rows only: already-deleted positions must not bloat the new
-    // sidecar (idempotent re-delete writes nothing). The (file, pos) meta
-    // columns are captured BEFORE the existing-deletes anti-join —
-    // _metadata resolves only on the scan itself, not on derived frames.
-    val scan = spark.read.parquet(files.map(resolve(dir, _)): _*)
-      .withColumn("__graft_del_f", col("_metadata.file_path"))
-      .withColumn("__graft_del_p", col("_metadata.row_index"))
-    val existing = manifestDeletes(fs, dir, v0)
-    val live =
-      if (existing.isEmpty) scan
-      else scan.join(
-        spark.read.parquet(existing.map(resolve(dir, _)): _*)
-          .select(col("file").as("__graft_del_f"),
-            col("pos").as("__graft_del_p")),
-        Seq("__graft_del_f", "__graft_del_p"), "left_anti")
-    val matched = live.where(pred)
-      .select(col("__graft_del_f").as("file"),
-        col("__graft_del_p").as("pos"))
-    val rel = s"_deletes/${java.util.UUID.randomUUID()}.parquet"
-    // distributed write — the position set never lands on the driver; the
-    // emptiness check rides the write job as an observed metric (r18)
-    // instead of a second re-read job over the just-written sidecar
-    val obs = new org.apache.spark.sql.Observation()
-    matched.observe(obs, org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.parquet(s"$dir/$rel")
-    val n = obs.get("n").asInstanceOf[Long]
-    if (n == 0L) { fs.delete(new Path(s"$dir/$rel"), true); return v0 }
-    val next = v0 + 1
-    val tmp = new Path(manifestDir(dir), s".tmp-del-${java.util.UUID.randomUUID()}")
-    val content = ((manifestLines(fs, dir, v0) :+ s"$DeletePrefix$rel")
-      .mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val won = versions(spark, dir).last == v0 &&
-      cas.claim(fs, tmp, new Path(manifestDir(dir), s"v$next.manifest"), content)
-    if (!won) {
-      fs.delete(new Path(s"$dir/$rel"), true)
-      throw new java.util.ConcurrentModificationException(
-        s"deleteWhere computed against v$v0 but the head moved — the " +
-          "positions may reference replaced files; re-run against the new head")
-    }
-    next
+    // sidecar (idempotent re-delete writes nothing)
+    val live = withPositions(spark, dir,
+      spark.read.parquet(base.files.map(resolve(dir, _)): _*), base.deletes)
+    publishDelete(spark, fs, dir, cas, base.version, live.where(pred))
   }
 
-  /** Commit `df` as the next snapshot: append (new files join the current
-    * snapshot's) or replace (new files ARE the snapshot). Returns the
-    * committed version. Safe under concurrent committers via the rename
-    * CAS; safe under crashes because nothing before the final rename is
-    * visible to readers.
-    *
-    * `readVersion` (≥ 0) declares the snapshot this commit was computed
-    * from and arms the conflict check described in the object doc; it
-    * throws [[java.util.ConcurrentModificationException]] instead of
-    * publishing a lost update. The caller's retry loop is: re-read the
-    * head, recompute `df`, commit with the new head as `readVersion`.
-    *
-    * Catalog-managed tables (r13 ADVICE): a table that has ever been
-    * written through [[Catalog.commit]] carries a `_catalog_managed`
-    * marker, and APPENDS here fail fast against it. The table's own head
-    * may sit past the last catalog-published version — a catalog
-    * transaction commits its per-table snapshots durably BEFORE the
-    * catalog CAS, so a conflict loser (or a crash before phase 2) leaves
-    * the head pointing at a snapshot NO catalog version ever published.
-    * An append bases its manifest on that head and would resurrect the
-    * orphaned data into a future catalog publish. Replaces stay allowed
-    * (they carry their own complete file list and cannot resurrect
-    * anything) — which is also what lets Catalog's own phase 1 commit
-    * through this guard.
-    */
-  /** Validate a batch schema against the pinned header (name + TYPE;
-    * nullability normalized — file sources force nullable anyway) and
-    * return the next header. Type clashes always refuse — a same-name-
-    * different-type batch would poison every subsequent by-name read.
-    * Without `evolveSchema` the column SET must match exactly; with it,
-    * new columns append to the header (old files null-backfill on read)
-    * and a batch may omit columns (they read as null by name). */
   /** Nullability normalized away, recursively — file-source reads force
     * nullable anyway, so the pinned contract compares name + type only. */
   private def nullableType(dt: org.apache.spark.sql.types.DataType)
@@ -337,14 +395,18 @@ object ManifestTable {
       case other => other
     }
   }
-  private def nullableSchema(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    nullableType(s).asInstanceOf[org.apache.spark.sql.types.StructType]
+  private def nullableSchema(s: StructType): StructType =
+    nullableType(s).asInstanceOf[StructType]
 
-  private def nextHeader(hs: org.apache.spark.sql.types.StructType,
-      batch: org.apache.spark.sql.types.StructType, evolveSchema: Boolean,
-      what: String, dir: String): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.StructType
+  /** Validate a batch schema against the pinned header (name + TYPE;
+    * nullability normalized — file sources force nullable anyway) and
+    * return the next header. Type clashes always refuse — a same-name-
+    * different-type batch would poison every subsequent by-name read.
+    * Without `evolveSchema` the column SET must match exactly; with it,
+    * new columns append to the header (old files null-backfill on read)
+    * and a batch may omit columns (they read as null by name). */
+  private def nextHeader(hs: StructType, batch: StructType,
+      evolveSchema: Boolean, what: String, dir: String): StructType = {
     val d = nullableSchema(batch)
     val h = nullableSchema(hs)
     val hMap = h.fields.map(f => f.name -> f.dataType).toMap
@@ -375,21 +437,18 @@ object ManifestTable {
     }
   }
 
-  /** The header the next snapshot publishes, with drift validation armed
-    * (round 18): first commits pin `df`'s schema; appends/replaces on a
-    * pinned table validate name+TYPE (refusing silent drift — the one
-    * formerly-silent failure path of the manifest layer); an explicit
-    * `evolveSchema` evolves it (append: merge; replace: the new frame
-    * defines the table). Legacy headerless tables skip validation and
-    * stay headerless on append — a replace adopts a header. */
-  private def resolveHeader(fs: FileSystem, dir: String, vs: Seq[Long],
-      df: DataFrame, replace: Boolean, evolveSchema: Boolean)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val headSchema =
-      if (vs.isEmpty) None
-      else manifestSchemaOf(manifestLines(fs, dir, vs.last))
-    if (vs.isEmpty) Some(nullableSchema(df.schema))
-    else (headSchema, replace) match {
+  /** The header the snapshot after `head` publishes, with drift
+    * validation armed (round 18): first commits pin `df`'s schema;
+    * appends/replaces on a pinned table validate name+TYPE (refusing
+    * silent drift — the one formerly-silent failure path of the manifest
+    * layer); an explicit `evolveSchema` evolves it (append: merge;
+    * replace: the new frame defines the table). Legacy headerless tables
+    * skip validation and stay headerless on append — a replace adopts a
+    * header. */
+  private def resolveHeader(dir: String, head: Snapshot, df: DataFrame,
+      replace: Boolean, evolveSchema: Boolean): Option[StructType] =
+    if (head == NoSnapshot) Some(nullableSchema(df.schema))
+    else (head.header, replace) match {
       case (None, false) => None
       case (None, true) => Some(nullableSchema(df.schema))
       case (Some(_), true) if evolveSchema => Some(nullableSchema(df.schema))
@@ -397,8 +456,46 @@ object ManifestTable {
         Some(nextHeader(hs, df.schema, evolveSchema,
           if (replace) "replace" else "append", dir))
     }
+
+  /** Write `df` as the immutable batch `dataRel`, then its sidecars, all
+    * before any manifest names it; returns the batch's parquet files as
+    * manifest entries, sorted.
+    *
+    * File-skipping stats (r14; footer-sourced since r18, see
+    * [[writeStats]]): min/max/non-null-count per file for `statsCols`
+    * land in a `_stats.tsv` sidecar INSIDE the batch dir. Bloom sidecar
+    * (r15): the point-lookup half of skipping — see [[FileBloom]]. Both
+    * are immutable and superset-guarantee-only: a committed batch either
+    * has them or (crash window) readers degrade to keep-all for it —
+    * pruning is an optimization, never a correctness dependency. */
+  private def writeBatch(spark: SparkSession, fs: FileSystem, dir: String,
+      dataRel: String, df: DataFrame, statsCols: Seq[String],
+      bloomCols: Seq[String], bloomBits: Int): Seq[String] = {
+    microsWrite(df, s"$dir/$dataRel")
+    if (statsCols.nonEmpty) writeStats(spark, fs, dir, dataRel, statsCols, df.schema)
+    if (bloomCols.nonEmpty)
+      FileBloom.write(spark, fs, dir, dataRel, bloomCols, bloomBits, 4, df.schema)
+    fs.listStatus(new Path(s"$dir/$dataRel")).toSeq
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
+      .map(n => s"$dataRel/$n")
   }
 
+  /** Commit `df` as the next snapshot: append (new files join the current
+    * snapshot's) or replace (new files ARE the snapshot). Returns the
+    * committed version. Safe under concurrent committers via the slot
+    * CAS; safe under crashes because nothing before the final claim is
+    * visible to readers.
+    *
+    * `readVersion` (≥ 0) declares the snapshot this commit was computed
+    * from and arms the conflict check described in the object doc
+    * (append: `Files`, replace: `Exact`); it throws
+    * [[java.util.ConcurrentModificationException]] instead of publishing
+    * a lost update. The caller's retry loop is: re-read the head,
+    * recompute `df`, commit with the new head as `readVersion`.
+    *
+    * Appends into a catalog-managed table fail fast (see
+    * [[guardCatalog]]); replaces stay allowed.
+    */
   def commit(spark: SparkSession, dir: String, df: DataFrame,
       replace: Boolean = false, readVersion: Long = -1L,
       tag: String = null, cas: CommitCas = RenameCas,
@@ -407,15 +504,11 @@ object ManifestTable {
     val fs = fsOf(spark, dir)
     // fail-fast schema validation against the current head — a drifted
     // batch must refuse BEFORE paying the data write (re-validated
-    // authoritatively inside the CAS loop in case the head moves)
-    resolveHeader(fs, dir, versions(spark, dir), df, replace, evolveSchema)
-    if (!replace && fs.exists(new Path(dir, CatalogManagedMarker)))
-      throw new IllegalStateException(
-        s"$dir is catalog-managed (it has been written through " +
-          "Catalog.commit): its own head may include snapshots no catalog " +
-          "version ever published, so a direct append basing on that head " +
-          "could resurrect orphaned data. Publish through Catalog.commit, " +
-          "or use replace semantics.")
+    // authoritatively inside the publish loop in case the head moves)
+    val vs = versions(spark, dir)
+    val pre = headOf(fs, dir, vs)
+    resolveHeader(dir, pre, df, replace, evolveSchema)
+    if (!replace) guardCatalog(fs, dir, "a direct append")
     // idempotent-commit support (the exactly-once streaming-sink
     // contract): a caller with a STABLE retry identity — Spark's
     // foreachBatch batchId — passes it as `tag`. The manifest reference
@@ -449,96 +542,96 @@ object ManifestTable {
     val batch = if (tag != null) tag else java.util.UUID.randomUUID().toString
     val dataRel = s"data/$batch"
     if (tag != null) {
-      val vs0 = versions(spark, dir)
       val dp = new Path(s"$dir/$dataRel")
       val dataDirExists = fs.exists(dp)
-      if (vs0.nonEmpty) {
-        if (manifestFiles(fs, dir, vs0.last)
-            .exists(_.startsWith(dataRel + "/")))
-          return vs0.last
-        if (dataDirExists && vs0.init.reverse.exists(v =>
-            manifestFiles(fs, dir, v).exists(_.startsWith(dataRel + "/"))))
-          return vs0.last
-      }
+      def lists(s: Snapshot) = s.files.exists(_.startsWith(dataRel + "/"))
+      if (lists(pre) || dataDirExists &&
+          vs.dropRight(1).reverse.exists(v => lists(snapshot(fs, dir, v))))
+        return pre.version
       if (dataDirExists) fs.delete(dp, true)
     }
-    microsWrite(df, s"$dir/$dataRel")
-    // File-skipping stats (r14; footer-sourced since r18): min/max/
-    // non-null-count per file for the requested columns land in a
-    // `_stats.tsv` sidecar INSIDE the batch dir. The values now come from
-    // the just-written parquet FOOTERS (O(files) metadata reads, zero
-    // extra Spark jobs) instead of a second distributed pass re-decoding
-    // every row — the Delta/Iceberg stats-at-write-time shape; at 100 TB
-    // the old second pass was a full extra read of the batch. Any
-    // (file, column) whose footer stats are absent or not provably
-    // render-identical (exotic type, NaN-dropped stats, oversized binary
-    // stats) falls back to the original scan pass restricted to exactly
-    // those files (r19 granular fallback), so sidecar bytes are IDENTICAL
-    // either way (ManifestStatsSpec pins this). Written before the
-    // manifest CAS, so a committed batch either has its stats or (crash
-    // window) readers degrade to keep-all for it — pruning is an
-    // optimization, never a correctness dependency.
-    if (statsCols.nonEmpty) writeStats(spark, fs, dir, dataRel, statsCols, df.schema)
-    // Bloom sidecar (r15): the point-lookup half of skipping — see
-    // [[FileBloom]]. Same contract as the stats sidecar: pre-CAS,
-    // immutable, superset-guarantee-only.
-    if (bloomCols.nonEmpty)
-      FileBloom.write(spark, fs, dir, dataRel, bloomCols, bloomBits, 4, df.schema)
-    val newFiles = fs.listStatus(new Path(s"$dir/$dataRel")).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$dataRel/$n")
-    fs.mkdirs(manifestDir(dir))
-    var committed = -1L
-    while (committed < 0) {
-      val vs = versions(spark, dir)
-      val next = vs.lastOption.getOrElse(0L) + 1
-      if (readVersion >= 0 && vs.lastOption.exists(_ != readVersion)) {
-        require(vs.contains(readVersion) || readVersion == 0,
-          s"readVersion $readVersion was never committed (or was expired " +
-            s"mid-transaction) — cannot validate; committed set: $vs")
-        if (replace)
-          throw new java.util.ConcurrentModificationException(
-            s"replace computed against v$readVersion but head is v${vs.last}" +
-              " — a swap would discard the concurrent commit (lost update);" +
-              " re-read the head and recompute")
-        // append: commutes with other appends, conflicts only if the files
-        // this transaction READ are no longer all in the head (a concurrent
-        // replace/compact retracted them)
-        val readSet =
-          if (readVersion == 0) Set.empty[String]
-          else manifestFiles(fs, dir, readVersion).toSet
-        val headSet = manifestFiles(fs, dir, vs.last).toSet
-        if (!readSet.subsetOf(headSet))
-          throw new java.util.ConcurrentModificationException(
-            s"append computed against v$readVersion, but " +
-              s"${(readSet -- headSet).size} of its files were rewritten by " +
-              s"v${vs.last} — appending derived rows would resurrect " +
-              "retracted data; re-read the head and recompute")
-      }
-      // the base file set is re-resolved on every CAS attempt: losing the
-      // race means the head moved, and an append must append to the NEW
-      // head, not the one read before the race
-      // manifestLines, not manifestFiles: an append must carry the head's
-      // delete sidecar entries forward or deleted rows would resurrect
-      // (the old schema header is dropped — the resolved one re-publishes)
-      val base = if (replace || vs.isEmpty) Seq.empty
-                 else manifestLines(fs, dir, vs.last)
-                   .filterNot(_.startsWith(SchemaPrefix))
-      // schema contract, validated against THIS attempt's head (r18)
-      val header = resolveHeader(fs, dir, vs, df, replace, evolveSchema)
-      // the slot claim is the pluggable primitive (CommitCas): rename CAS
-      // on stores with atomic fail-on-existing rename, the lock-file shim
-      // on raw object stores — same one-winner-per-slot contract either way
-      val tmp = new Path(manifestDir(dir), s".tmp-$batch-$next")
-      val content = ((header.map(schemaLineOf).toSeq ++ base ++ newFiles)
-        .mkString("\n") + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (cas.claim(fs, tmp, new Path(manifestDir(dir), s"v$next.manifest"),
-          content))
-        committed = next
-      // else: lost the slot — recompute base/conflicts against the new head
+    val newFiles = writeBatch(spark, fs, dir, dataRel, df, statsCols,
+      bloomCols, bloomBits)
+    val read =
+      if (readVersion < 0) Blind
+      else if (replace) Exact(readVersion)
+      else Files(readVersion)
+    transact(spark, dir, cas, read, batch, Seq(dataRel)) { head =>
+      // an append carries the head's delete sidecar entries forward, or
+      // deleted rows would resurrect; the head's schema header gives way
+      // to the one resolved against THIS head
+      resolveHeader(dir, head, df, replace, evolveSchema).map(schemaLineOf).toSeq ++
+        (if (replace) Nil else head.lines.filterNot(_.startsWith(SchemaPrefix))) ++
+        newFiles
     }
-    committed
+  }
+
+  /** The head of `dir` for a merge-on-read MERGE of `updates` on
+    * `keyCols`, with the delta validated against it: with a pinned header
+    * (r18) the standing name+TYPE contract — validated even against an
+    * empty head — and on legacy headerless tables the footer-derived
+    * check. A column-set mismatch would make later by-name reads silently
+    * null-fill or drop columns, and a same-NAME-different-TYPE column
+    * would commit and then poison every whole-table scan with conflicting
+    * physical parquet types — so both refuse loudly, pre-publish. Returns
+    * the head and the scan of its files; None when it lists no file (an
+    * empty REPLACE, or everything compacted away): nothing can match, and
+    * the merge degrades to a pure append of the delta instead of tripping
+    * parquet's unable-to-infer-schema on a zero-path read. */
+  private def mergeBase(spark: SparkSession, fs: FileSystem, dir: String,
+      updates: DataFrame, keyCols: Seq[String],
+      what: String): (Snapshot, Option[DataFrame]) = {
+    require(keyCols.nonEmpty, s"$what needs at least one key column")
+    guardCatalog(fs, dir, what)
+    val base = snapshotAt(spark, dir, -1L)
+    keyCols.foreach(k => require(updates.columns.contains(k),
+      s"key column $k not in the delta"))
+    base.header.foreach(hs =>
+      nextHeader(hs, updates.schema, evolveSchema = false,
+        "upsertMor delta", dir))
+    if (base.files.isEmpty) (base, None)
+    else {
+      val raw = dataReader(spark, base.header)
+        .parquet(base.files.map(resolve(dir, _)): _*)
+      if (base.header.isEmpty) {
+        require(updates.columns.sorted.sameElements(raw.columns.sorted),
+          s"upsertMor delta columns ${updates.columns.sorted.mkString(",")} " +
+            s"differ from the table's ${raw.columns.sorted.mkString(",")} — " +
+            "align the delta schema first")
+        val tableTypes = raw.schema.map(f => f.name -> f.dataType).toMap
+        val badTypes = updates.schema
+          .filter(f => tableTypes(f.name) != f.dataType)
+          .map(f => s"${f.name}: table ${tableTypes(f.name).sql} vs " +
+            s"delta ${f.dataType.sql}")
+        require(badTypes.isEmpty,
+          s"upsertMor delta column types differ from the table's " +
+            s"(${badTypes.mkString("; ")}) — cast the delta to the table " +
+            "schema first")
+      }
+      (base, Some(raw))
+    }
+  }
+
+  /** The MERGE publish: position-delete the `live` rows (a
+    * [[withPositions]] frame carrying the key columns) whose keys appear
+    * in `updates`, land the FULL `updates` frame as a new batch (matched
+    * rows replace their deleted originals, unmatched keys are the
+    * inserts), and publish both in one version on snapshot `base`
+    * (Exact). */
+  private def publishMerge(spark: SparkSession, fs: FileSystem, dir: String,
+      cas: CommitCas, base: Long, live: Option[DataFrame], updates: DataFrame,
+      keyCols: Seq[String], statsCols: Seq[String], bloomCols: Seq[String],
+      bloomBits: Int): Long = {
+    import org.apache.spark.sql.functions.col
+    val del = live.flatMap(l => writeDeletes(fs, dir,
+      l.join(updates.select(keyCols.map(col): _*).distinct(), keyCols,
+        "left_semi")))
+    val batch = java.util.UUID.randomUUID().toString
+    val dataRel = s"data/$batch"
+    val newFiles = writeBatch(spark, fs, dir, dataRel, updates, statsCols,
+      bloomCols, bloomBits)
+    transact(spark, dir, cas, Exact(base), batch, dataRel +: del.toSeq)(
+      _.lines ++ del.map(DeletePrefix + _) ++ newFiles)
   }
 
   /** Atomic merge-on-read MERGE/UPSERT (round 16) — [[deleteWhere]]'s
@@ -557,115 +650,11 @@ object ManifestTable {
       keyCols: Seq[String], cas: CommitCas = RenameCas,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomBits: Int = 1 << 20): Long = {
-    import org.apache.spark.sql.functions.col
-    require(keyCols.nonEmpty, "upsertMor needs at least one key column")
     val fs = fsOf(spark, dir)
-    if (fs.exists(new Path(dir, CatalogManagedMarker)))
-      throw new IllegalStateException(
-        s"$dir is catalog-managed: upsertMor may not publish a new " +
-          "manifest head behind the catalog. Publish through Catalog.commit.")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"$dir has no committed snapshot")
-    val v0 = vs.last
-    val files = manifestFiles(fs, dir, v0)
-    keyCols.foreach(k => require(updates.columns.contains(k),
-      s"key column $k not in the delta"))
-    val header = manifestSchemaOf(manifestLines(fs, dir, v0))
-    // the delta lands as a sibling batch under the SAME logical schema:
-    // with a pinned header (r18) this is the standing name+TYPE contract
-    // (validated even against an empty head — the guard no longer
-    // depends on having files to infer from); legacy headerless tables
-    // keep the footer-derived check when files exist
-    header.foreach(hs =>
-      nextHeader(hs, updates.schema, evolveSchema = false,
-        "upsertMor delta", dir))
-    val delRel = s"_deletes/${java.util.UUID.randomUUID()}.parquet"
-    val anyMatched = if (files.isEmpty) {
-      // committed-but-empty snapshot (an empty REPLACE, or everything
-      // compacted away): nothing can match — the merge degrades to a
-      // pure append of the delta instead of tripping parquet's
-      // unable-to-infer-schema on a zero-path read
-      false
-    } else {
-      // a column-set mismatch would make later by-name parquet reads
-      // silently null-fill or drop columns depending on which file the
-      // schema gets inferred from, and a same-NAME-different-TYPE column
-      // would pass a name-only check, commit, and then poison every
-      // subsequent whole-table scan with conflicting physical parquet
-      // types POST-commit — fail loudly on names AND types, pre-publish
-      val raw = dataReader(spark, header)
-        .parquet(files.map(resolve(dir, _)): _*)
-      if (header.isEmpty) {
-        require(updates.columns.sorted.sameElements(raw.columns.sorted),
-          s"upsertMor delta columns ${updates.columns.sorted.mkString(",")} " +
-            s"differ from the table's ${raw.columns.sorted.mkString(",")} — " +
-            "align the delta schema first")
-        val tableTypes = raw.schema.map(f => f.name -> f.dataType).toMap
-        val badTypes = updates.schema
-          .filter(f => tableTypes(f.name) != f.dataType)
-          .map(f => s"${f.name}: table ${tableTypes(f.name).sql} vs " +
-            s"delta ${f.dataType.sql}")
-        require(badTypes.isEmpty,
-          s"upsertMor delta column types differ from the table's " +
-            s"(${badTypes.mkString("; ")}) — cast the delta to the table " +
-            "schema first")
-      }
-      // matched positions among LIVE rows (existing deletes excluded first)
-      val scan = raw
-        .withColumn("__graft_del_f", col("_metadata.file_path"))
-        .withColumn("__graft_del_p", col("_metadata.row_index"))
-      val existing = manifestDeletes(fs, dir, v0)
-      val live =
-        if (existing.isEmpty) scan
-        else scan.join(
-          spark.read.parquet(existing.map(resolve(dir, _)): _*)
-            .select(col("file").as("__graft_del_f"),
-              col("pos").as("__graft_del_p")),
-          Seq("__graft_del_f", "__graft_del_p"), "left_anti")
-      val matched = live
-        .join(updates.select(keyCols.map(col): _*).distinct(), keyCols,
-          "left_semi")
-        .select(col("__graft_del_f").as("file"), col("__graft_del_p").as("pos"))
-      // emptiness check observed on the write job itself (r18) — no
-      // second job re-reading the sidecar it just wrote
-      val obs = new org.apache.spark.sql.Observation()
-      matched.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-        .write.parquet(s"$dir/$delRel")
-      val any = obs.get("n").asInstanceOf[Long] > 0L
-      if (!any) fs.delete(new Path(s"$dir/$delRel"), true)
-      any
-    }
-    // the new batch: the FULL updates frame (matched rows replace their
-    // deleted originals, unmatched keys are the inserts)
-    val dataRel = s"data/${java.util.UUID.randomUUID()}"
-    microsWrite(updates, s"$dir/$dataRel")
-    // same sidecar contract as commit(): pre-CAS, immutable, superset-
-    // guarantee-only — a merged delta batch skips like any other
-    if (statsCols.nonEmpty)
-      writeStats(spark, fs, dir, dataRel, statsCols, updates.schema)
-    if (bloomCols.nonEmpty)
-      FileBloom.write(spark, fs, dir, dataRel, bloomCols, bloomBits, 4,
-        updates.schema)
-    val newFiles = fs.listStatus(new Path(s"$dir/$dataRel")).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$dataRel/$n")
-    val lines = manifestLines(fs, dir, v0) ++
-      (if (anyMatched) Seq(s"$DeletePrefix$delRel") else Nil) ++ newFiles
-    val next = v0 + 1
-    val tmp = new Path(manifestDir(dir), s".tmp-mor-${java.util.UUID.randomUUID()}")
-    val content = (lines.mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val won = versions(spark, dir).last == v0 &&
-      cas.claim(fs, tmp, new Path(manifestDir(dir), s"v$next.manifest"), content)
-    if (!won) {
-      if (anyMatched) fs.delete(new Path(s"$dir/$delRel"), true)
-      fs.delete(new Path(s"$dir/$dataRel"), true)
-      throw new java.util.ConcurrentModificationException(
-        s"upsertMor computed against v$v0 but the head moved — the matched " +
-          "positions may reference replaced files; re-run against the new head")
-    }
-    next
+    val (base, raw) = mergeBase(spark, fs, dir, updates, keyCols, "upsertMor")
+    publishMerge(spark, fs, dir, cas, base.version,
+      raw.map(withPositions(spark, dir, _, base.deletes)), updates, keyCols,
+      statsCols, bloomCols, bloomBits)
   }
 
   /** [[deleteWhere]] followed by [[upsertMor]] with ONE position scan of
@@ -691,140 +680,35 @@ object ManifestTable {
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomBits: Int = 1 << 20): (Long, Long) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    require(keyCols.nonEmpty, "deleteThenUpsertMor needs at least one key column")
     val fs = fsOf(spark, dir)
-    if (fs.exists(new Path(dir, CatalogManagedMarker)))
-      throw new IllegalStateException(
-        s"$dir is catalog-managed: deleteThenUpsertMor may not publish a " +
-          "new manifest head behind the catalog. Publish through Catalog.commit.")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"$dir has no committed snapshot")
-    val v0 = vs.last
-    val files = manifestFiles(fs, dir, v0)
-    keyCols.foreach(k => require(updates.columns.contains(k),
-      s"key column $k not in the delta"))
-    val header = manifestSchemaOf(manifestLines(fs, dir, v0))
-    header.foreach(hs =>
-      nextHeader(hs, updates.schema, evolveSchema = false,
-        "upsertMor delta", dir))
-    if (files.isEmpty) {
-      // empty head: nothing can match either op — the sequence degrades
-      // to deleteWhere's no-op + upsertMor's pure append
-      val v2 = upsertMor(spark, dir, updates, keyCols, cas, statsCols,
-        bloomCols, bloomBits)
-      return (v0, v2)
-    }
-    val clash = keyCols.filter(Set("file", "pos", "__graft_pred"))
+    val (base, raw) = mergeBase(spark, fs, dir, updates, keyCols,
+      "deleteThenUpsertMor")
+    // empty head: nothing can match either op — the sequence degrades to
+    // deleteWhere's no-op + upsertMor's pure append
+    if (raw.isEmpty)
+      return (base.version, publishMerge(spark, fs, dir, cas, base.version,
+        None, updates, keyCols, statsCols, bloomCols, bloomBits))
+    val clash = keyCols.filter(Set(PosFile, PosRow, "__graft_pred"))
     require(clash.isEmpty,
       s"deleteThenUpsertMor: key column(s) ${clash.mkString(", ")} collide " +
-        "with the kernel's internal names (file, pos, __graft_pred) — use " +
-        "the sequential deleteWhere + upsertMor calls for this table")
+        s"with the kernel's internal names ($PosFile, $PosRow, __graft_pred) " +
+        "— use the sequential deleteWhere + upsertMor calls for this table")
     // ONE scan of the head: live rows with their positions, the delete
     // predicate evaluated per row, and the merge keys — persisted so the
     // two sidecar writes share it instead of each re-reading the table
-    val raw = dataReader(spark, header)
-      .parquet(files.map(resolve(dir, _)): _*)
-    if (header.isEmpty) {
-      // legacy headerless table: the same pre-publish name+type check
-      // upsertMor performs (a drifted delta would poison later reads)
-      require(updates.columns.sorted.sameElements(raw.columns.sorted),
-        s"upsertMor delta columns ${updates.columns.sorted.mkString(",")} " +
-          s"differ from the table's ${raw.columns.sorted.mkString(",")} — " +
-          "align the delta schema first")
-      val tableTypes = raw.schema.map(f => f.name -> f.dataType).toMap
-      val badTypes = updates.schema
-        .filter(f => tableTypes(f.name) != f.dataType)
-        .map(f => s"${f.name}: table ${tableTypes(f.name).sql} vs " +
-          s"delta ${f.dataType.sql}")
-      require(badTypes.isEmpty,
-        s"upsertMor delta column types differ from the table's " +
-          s"(${badTypes.mkString("; ")}) — cast the delta to the table " +
-          "schema first")
-    }
-    val scan = raw
-      .withColumn("__graft_del_f", col("_metadata.file_path"))
-      .withColumn("__graft_del_p", col("_metadata.row_index"))
-    val existing = manifestDeletes(fs, dir, v0)
-    val live =
-      if (existing.isEmpty) scan
-      else scan.join(
-        spark.read.parquet(existing.map(resolve(dir, _)): _*)
-          .select(col("file").as("__graft_del_f"),
-            col("pos").as("__graft_del_p")),
-        Seq("__graft_del_f", "__graft_del_p"), "left_anti")
-    val slim = live.select(
-      (Seq(col("__graft_del_f").as("file"), col("__graft_del_p").as("pos"),
-        pred.as("__graft_pred")) ++
+    val slim = withPositions(spark, dir, raw.get, base.deletes)
+      .select((Seq(col(PosFile), col(PosRow), pred.as("__graft_pred")) ++
         keyCols.map(col)): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // --- phase 1: the DELETE's position sidecar + publish ---
-      val delRelA = s"_deletes/${java.util.UUID.randomUUID()}.parquet"
-      val obsA = new org.apache.spark.sql.Observation()
-      slim.where(col("__graft_pred")).select(col("file"), col("pos"))
-        .observe(obsA, org.apache.spark.sql.functions.count(lit(1)).as("n"))
-        .write.parquet(s"$dir/$delRelA")
-      val nA = obsA.get("n").asInstanceOf[Long]
-      val v1 =
-        if (nA == 0L) { fs.delete(new Path(s"$dir/$delRelA"), true); v0 }
-        else {
-          val next = v0 + 1
-          val tmp = new Path(manifestDir(dir),
-            s".tmp-del-${java.util.UUID.randomUUID()}")
-          val content = ((manifestLines(fs, dir, v0) :+ s"$DeletePrefix$delRelA")
-            .mkString("\n") + "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val won = versions(spark, dir).last == v0 &&
-            cas.claim(fs, tmp, new Path(manifestDir(dir), s"v$next.manifest"),
-              content)
-          if (!won) {
-            fs.delete(new Path(s"$dir/$delRelA"), true)
-            throw new java.util.ConcurrentModificationException(
-              s"deleteThenUpsertMor computed against v$v0 but the head " +
-                "moved — re-run against the new head")
-          }
-          next
-        }
-      // --- phase 2: the MERGE's position sidecar + batch + publish ---
+      val v1 = publishDelete(spark, fs, dir, cas, base.version,
+        slim.where(col("__graft_pred")))
       // the merge's live set = live rows whose pred is NOT true (false or
       // null) — exactly the rows the sequential upsertMor would see after
       // anti-joining the delete sidecar it follows
-      val delRelB = s"_deletes/${java.util.UUID.randomUUID()}.parquet"
-      val obsB = new org.apache.spark.sql.Observation()
-      slim.where(not(coalesce(col("__graft_pred"), lit(false))))
-        .join(updates.select(keyCols.map(col): _*).distinct(), keyCols,
-          "left_semi")
-        .select(col("file"), col("pos"))
-        .observe(obsB, org.apache.spark.sql.functions.count(lit(1)).as("n"))
-        .write.parquet(s"$dir/$delRelB")
-      val anyB = obsB.get("n").asInstanceOf[Long] > 0L
-      if (!anyB) fs.delete(new Path(s"$dir/$delRelB"), true)
-      val dataRel = s"data/${java.util.UUID.randomUUID()}"
-      microsWrite(updates, s"$dir/$dataRel")
-      if (statsCols.nonEmpty)
-        writeStats(spark, fs, dir, dataRel, statsCols, updates.schema)
-      if (bloomCols.nonEmpty)
-        FileBloom.write(spark, fs, dir, dataRel, bloomCols, bloomBits, 4,
-          updates.schema)
-      val newFiles = fs.listStatus(new Path(s"$dir/$dataRel")).toSeq
-        .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-        .map(n => s"$dataRel/$n")
-      val lines = manifestLines(fs, dir, v1) ++
-        (if (anyB) Seq(s"$DeletePrefix$delRelB") else Nil) ++ newFiles
-      val v2 = v1 + 1
-      val tmp = new Path(manifestDir(dir),
-        s".tmp-mor-${java.util.UUID.randomUUID()}")
-      val content = (lines.mkString("\n") + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val won = versions(spark, dir).last == v1 &&
-        cas.claim(fs, tmp, new Path(manifestDir(dir), s"v$v2.manifest"), content)
-      if (!won) {
-        if (anyB) fs.delete(new Path(s"$dir/$delRelB"), true)
-        fs.delete(new Path(s"$dir/$dataRel"), true)
-        throw new java.util.ConcurrentModificationException(
-          s"deleteThenUpsertMor computed against v$v1 but the head moved — " +
-            "re-run against the new head")
-      }
+      val v2 = publishMerge(spark, fs, dir, cas, v1,
+        Some(slim.where(not(coalesce(col("__graft_pred"), lit(false))))),
+        updates, keyCols, statsCols, bloomCols, bloomBits)
       (v1, v2)
     } finally slim.unpersist(blocking = false)
   }
@@ -855,42 +739,36 @@ object ManifestTable {
     require(fromVersion <= to,
       s"fromVersion $fromVersion is past toVersion $to")
     val fs = fsOf(spark, dir)
-    val before = manifestFiles(fs, dir, fromVersion).toSet
-    val added = manifestFiles(fs, dir, to).filterNot(before)
-    if (added.isEmpty)
-      // preserve the table schema on an empty increment: zero-row read of
-      // the to-version snapshot, not an empty zero-column frame
-      emptySnapshot(spark, dir, to)
-    else
-      // the to-version's row-level deletes apply to the increment too —
-      // a consumer of (from, to] must not receive rows to already deleted
-      applyDeletes(spark, dir, manifestDeletes(fs, dir, to),
-        dataReader(spark, manifestSchemaOf(manifestLines(fs, dir, to)))
-          .parquet(added.map(resolve(dir, _)): _*))
+    val toSnap = snapshot(fs, dir, to)
+    val before = snapshot(fs, dir, fromVersion).files.toSet
+    val added = toSnap.files.filterNot(before)
+    // an empty increment keeps the table schema; the to-version's
+    // row-level deletes apply to the increment too — a consumer of
+    // (from, to] must not receive rows `to` already deleted
+    if (added.isEmpty) emptySnapshot(spark, dir, toSnap)
+    else scan(spark, dir, toSnap, added)
   }
 
   /** Zero-row frame that still carries the TABLE schema even when
     * snapshot `to` references no data files (an empty REPLACE, or
     * everything compacted away): `read(to).limit(0)` would degrade to a
     * zero-COLUMN emptyDataFrame and break every "schema intact" contract
-    * downstream (r17 ADVICE). The schema comes from the newest version
-    * <= `to` that still references files; a table that never held a file
-    * has no schema to preserve and degrades to emptyDataFrame honestly. */
+    * downstream (r17 ADVICE). A pinned schema header answers without
+    * touching any file list; on legacy headerless tables the schema comes
+    * from the newest version <= `to` that still references files, and a
+    * table that never held a file has no schema to preserve and degrades
+    * to emptyDataFrame honestly. */
   private def emptySnapshot(spark: SparkSession, dir: String,
-      to: Long): DataFrame = {
-    val fs = fsOf(spark, dir)
-    // a pinned schema header answers without touching any file list
-    manifestSchemaOf(manifestLines(fs, dir, to)) match {
-      case Some(s) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None =>
-        versions(spark, dir).filter(_ <= to).reverse
-          .find(v => manifestFiles(fs, dir, v).nonEmpty) match {
-          case Some(v) => read(spark, dir, v).limit(0)
-          case None => spark.emptyDataFrame
-        }
+      to: Snapshot): DataFrame =
+    if (to.header.nonEmpty) scan(spark, dir, to, Nil)
+    else {
+      val fs = fsOf(spark, dir)
+      versions(spark, dir).filter(_ <= to.version).reverse
+        .find(v => snapshot(fs, dir, v).files.nonEmpty) match {
+        case Some(v) => read(spark, dir, v).limit(0)
+        case None => spark.emptyDataFrame
+      }
     }
-  }
 
   /** Row-level CHANGE FEED (round 17) — Delta's `table_changes` surface
     * on the manifest protocol: every row-level change committed in
@@ -948,22 +826,20 @@ object ManifestTable {
     // ONCE, refusing rewrite commits and recording (added file → version)
     // and (added sidecar → version). O(versions) manifest reads and
     // O(files) strings — never data I/O.
-    var prevFiles =
-      if (fromVersion == 0L) Set.empty[String]
-      else manifestFiles(fs, dir, fromVersion).toSet
-    var prevDels =
-      if (fromVersion == 0L) Set.empty[String]
-      else manifestDeletes(fs, dir, fromVersion).toSet
+    val from = if (fromVersion == 0L) NoSnapshot else snapshot(fs, dir, fromVersion)
+    var prevFiles = from.files.toSet
+    var prevDels = from.deletes.toSet
     val addedFilesV = Seq.newBuilder[(String, Long)]
     val addedDelsV = Seq.newBuilder[(String, Long)]
     for (v <- window) {
-      val curFiles = manifestFiles(fs, dir, v)
+      val cur = snapshot(fs, dir, v)
+      val curFiles = cur.files
       val removed = prevFiles -- curFiles.toSet
       require(removed.isEmpty,
         s"version $v removes ${removed.size} data file(s) (REPLACE/" +
           "OPTIMIZE/restore): file rewrites are not row changes — " +
           s"restart the change feed from version $v")
-      val curDels = manifestDeletes(fs, dir, v)
+      val curDels = cur.deletes
       // a version that DROPS a delete sidecar while keeping the file set
       // (restore to a pre-delete snapshot) logically RE-INSERTS the
       // deleted rows; emitting zero events for it would silently break
@@ -1014,7 +890,8 @@ object ManifestTable {
       }
     // events render under the TO version's pinned schema (by-name reads —
     // files from before an evolveSchema commit null-backfill new columns)
-    val feedHeader = manifestSchemaOf(manifestLines(fs, dir, to))
+    val toSnap = snapshot(fs, dir, to)
+    val feedHeader = toSnap.header
     val insFiles = addedFilesV.result()
     val ins =
       if (insFiles.isEmpty) Nil
@@ -1062,7 +939,7 @@ object ManifestTable {
     val frames = ins ++ del
     val feed =
       if (frames.isEmpty)
-        emptySnapshot(spark, dir, to)
+        emptySnapshot(spark, dir, toSnap)
           .withColumn("_change_type", lit("insert"))
           .withColumn("_commit_version", lit(0L))
           .limit(0)
@@ -1106,21 +983,19 @@ object ManifestTable {
     */
   def clone(spark: SparkSession, srcDir: String, dstDir: String,
       version: Long = -1L, cas: CommitCas = RenameCas): Long = {
-    val vs = versions(spark, srcDir)
-    require(vs.nonEmpty, s"$srcDir has no committed snapshot")
-    val v = if (version < 0) vs.last else version
-    require(vs.contains(v), s"version $v not in committed set $vs")
     // resolve against the source ONCE: entries become source-rooted
     // absolute paths (cloning a clone keeps already-absolute entries);
     // delete sidecar entries resolve the same way, so a clone of a
     // merge-on-read snapshot keeps its row-level deletes applied
-    val lines = manifestLines(fsOf(spark, srcDir), srcDir, v).map { l =>
+    val lines = snapshotAt(spark, srcDir, version).lines.map { l =>
       if (l.startsWith(SchemaPrefix)) l // the schema header is not a path
       else if (l.startsWith(DeletePrefix))
         DeletePrefix + resolve(srcDir, l.stripPrefix(DeletePrefix))
       else resolve(srcDir, l)
     }
-    publishFileList(spark, dstDir, lines, cas)
+    guardCatalog(fsOf(spark, dstDir), dstDir, "clone")
+    transact(spark, dstDir, cas, Blind, java.util.UUID.randomUUID().toString,
+      Nil)(_ => lines)
   }
 
   /** RESTORE — Delta's `RESTORE TABLE ... VERSION AS OF` shape (round 15):
@@ -1130,39 +1005,14 @@ object ManifestTable {
     * the files are already this table's. */
   def restore(spark: SparkSession, dir: String, version: Long,
       cas: CommitCas = RenameCas): Long = {
+    val fs = fsOf(spark, dir)
     val vs = versions(spark, dir)
     require(vs.contains(version),
       s"version $version not in committed set $vs (expired?)")
-    publishFileList(spark, dir,
-      manifestLines(fsOf(spark, dir), dir, version), cas)
-  }
-
-  /** CAS-publish an explicit file list as the next snapshot at `dir` —
-    * the metadata-only commit [[clone]] and [[restore]] share. */
-  private def publishFileList(spark: SparkSession, dir: String,
-      files: Seq[String], cas: CommitCas): Long = {
-    val fs = fsOf(spark, dir)
-    // same guard commit() enforces: restore()/clone()-into-existing must
-    // not publish new head versions into a catalog-managed table behind
-    // the catalog's back — the catalog's pinned version is the contract
-    if (fs.exists(new Path(dir, CatalogManagedMarker)))
-      throw new IllegalStateException(
-        s"$dir is catalog-managed: restore/clone may not publish a new " +
-          "manifest head behind the catalog. Publish through Catalog.commit.")
-    fs.mkdirs(manifestDir(dir))
-    var committed = -1L
-    while (committed < 0) {
-      val next = versions(spark, dir).lastOption.getOrElse(0L) + 1
-      val tmp = new Path(manifestDir(dir),
-        s".tmp-pub-${java.util.UUID.randomUUID()}")
-      val content = (files.mkString("\n") + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (cas.claim(fs, tmp, new Path(manifestDir(dir),
-          s"v$next.manifest"), content))
-        committed = next
-      // else: lost the slot to a concurrent committer — retry at the next
-    }
-    committed
+    val lines = snapshot(fs, dir, version).lines
+    guardCatalog(fs, dir, "restore")
+    transact(spark, dir, cas, Blind, java.util.UUID.randomUUID().toString,
+      Nil)(_ => lines)
   }
 
   private val StatsName = "_stats.tsv"
@@ -1178,22 +1028,6 @@ object ManifestTable {
     java.util.Base64.getDecoder.decode(s),
     java.nio.charset.StandardCharsets.UTF_8)
 
-  /** Collect per-file min/max/non-null stats for `statsCols` over the batch
-    * at `dir/dataRel` and write the `_stats.tsv` sidecar. One distributed
-    * scan (group by physical file); driver state is files × columns lines.
-    * Values are rendered via CAST(.. AS STRING) — the one canonical,
-    * writer-independent encoding Spark already defines per type — and
-    * base64-wrapped in the sidecar so arbitrary string data can never break
-    * the line format. The one exception is TIMESTAMP (the instant type):
-    * its string rendering depends on the writer session's
-    * spark.sql.session.timeZone, so a reader in another zone would compare
-    * against foreign renderings and could prune files whose rows match.
-    * Timestamp stats are therefore stored as epoch MICROS (zone-free); the
-    * reader converts its predicate to micros under ITS session zone — the
-    * same zone Spark uses for the residual row filter, so pruning and
-    * filtering agree by construction. timestamp_ntz and date renderings are
-    * zone-independent and stay as strings.
-    */
   /** Manifest data writes pin the parquet timestamp layout to INT64
     * micros (r18): INT96 — Spark's historical default — is deprecated in
     * the parquet spec, 50% fatter per value, and carries NO usable
@@ -1228,17 +1062,6 @@ object ManifestTable {
     }
   }
 
-  /** Footer-sourced per-file stats (r18): the min/max/null-count the scan
-    * pass recomputed per row is ALREADY in the parquet footers the write
-    * just produced. Returns the sidecar lines, or None when ANY requested
-    * column of ANY file is not provably render-identical from its footer
-    * (missing/dropped stats — NaN doubles, oversized binary, INT96 — or a
-    * type outside the proven rendering set), in which case the caller
-    * runs the original scan pass, keeping sidecar bytes identical in
-    * every degraded case. Rendering goes through catalyst's own Cast to
-    * StringType (the exact expression the scan pass evaluated), so
-    * formatting cannot drift between the two paths.
-    */
   /** Per-(file, column) footer stat lines (r19 granular form of the r18
     * all-or-nothing footerStatsLines): for every `.parquet` file of the
     * batch (sorted by name) and every requested column, either the exact
@@ -1369,6 +1192,25 @@ object ManifestTable {
     else Some(names.flatMap(f => cols.map(c => pairs((f, c)).get)))
   }
 
+  /** Collect per-file min/max/non-null stats for `statsCols` over the
+    * batch at `dir/dataRel` and write the `_stats.tsv` sidecar: one line
+    * per (file, column), files sorted by name, columns in request order.
+    * Lines come from the parquet footers ([[footerStatsPartial]]) where
+    * those are provably render-identical, else from the distributed scan
+    * pass restricted to the ambiguous files; driver state is files ×
+    * columns lines. Values are rendered via CAST(.. AS STRING) — the one
+    * canonical, writer-independent encoding Spark already defines per
+    * type — and base64-wrapped in the sidecar so arbitrary string data can
+    * never break the line format. The one exception is TIMESTAMP (the
+    * instant type): its string rendering depends on the writer session's
+    * spark.sql.session.timeZone, so a reader in another zone would compare
+    * against foreign renderings and could prune files whose rows match.
+    * Timestamp stats are therefore stored as epoch MICROS (zone-free); the
+    * reader converts its predicate to micros under ITS session zone — the
+    * same zone Spark uses for the residual row filter, so pruning and
+    * filtering agree by construction. timestamp_ntz and date renderings are
+    * zone-independent and stay as strings.
+    */
   private[graft] def writeStats(spark: SparkSession, fs: FileSystem, dir: String,
       dataRel: String, statsCols: Seq[String],
       schema: org.apache.spark.sql.types.StructType): Unit = {
@@ -1391,6 +1233,11 @@ object ManifestTable {
           pairs((f, c)).getOrElse(scanned((f, c)))
         })
       }
+    writeStatsLines(fs, dir, dataRel, lines)
+  }
+
+  private def writeStatsLines(fs: FileSystem, dir: String, dataRel: String,
+      lines: Seq[String]): Unit = {
     val out = fs.create(new Path(s"$dir/$dataRel/$StatsName"), true)
     try out.write((lines.mkString("\n") + "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1446,13 +1293,14 @@ object ManifestTable {
     (lines ++ empties).toMap
   }
 
+  /** The pure scan-pass sidecar, in [[writeStats]]'s line order — the
+    * reference the footer path is pinned byte-identical to. */
   private[graft] def writeStatsScan(spark: SparkSession, fs: FileSystem, dir: String,
       dataRel: String, statsCols: Seq[String]): Unit = {
-    val lines = scanStatsLines(spark, fs, dir, dataRel, statsCols, None).values.toSeq
-    val out = fs.create(new Path(s"$dir/$dataRel/$StatsName"), true)
-    try out.write((lines.mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val cols = statsCols.distinct
+    val scanned = scanStatsLines(spark, fs, dir, dataRel, cols, None)
+    writeStatsLines(fs, dir, dataRel, scanned.keys.map(_._1).toSeq.distinct.sorted
+      .flatMap(f => cols.map(c => scanned((f, c)))))
   }
 
   /** Stats for every file of snapshot `v`, keyed by manifest-relative path.
@@ -1602,11 +1450,7 @@ object ManifestTable {
     * read needs to SEE. O(files) metadata, no data I/O. */
   def stats(spark: SparkSession, dir: String,
       version: Long = -1L): DataFrame = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"$dir has no committed snapshot")
-    val v = if (version < 0) vs.last else version
-    require(vs.contains(v), s"version $v not in committed set $vs")
-    val files = manifestFiles(fsOf(spark, dir), dir, v)
+    val files = snapshotAt(spark, dir, version).files
     val rows = statsFor(fsOf(spark, dir), dir, files).toSeq.flatMap {
       case (f, cols) => cols.toSeq.map { case (c, cs) =>
         (f, c, cs.typeName, cs.rows, cs.nonNull,
@@ -1659,11 +1503,7 @@ object ManifestTable {
     * so specs and metrics can assert how much a predicate pruned. */
   def pruneFiles(spark: SparkSession, dir: String, preds: Seq[StatsPred],
       version: Long = -1L): (Seq[String], Int) = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"$dir has no committed snapshot")
-    val v = if (version < 0) vs.last else version
-    require(vs.contains(v), s"version $v not in committed set $vs")
-    val files = manifestFiles(fsOf(spark, dir), dir, v)
+    val files = snapshotAt(spark, dir, version).files
     (pruneFileList(spark, dir, files, preds), files.size)
   }
 
@@ -1680,15 +1520,10 @@ object ManifestTable {
       version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
     require(preds.nonEmpty, "readPruned without predicates is read()")
-    val (kept, _) = pruneFiles(spark, dir, preds, version)
-    val vs = versions(spark, dir)
-    val v = if (version < 0) vs.last else version
-    val base =
-      if (kept.isEmpty) read(spark, dir, version)
-      else applyDeletes(spark, dir, manifestDeletes(fsOf(spark, dir), dir, v),
-        dataReader(spark,
-          manifestSchemaOf(manifestLines(fsOf(spark, dir), dir, v)))
-          .parquet(kept.map(resolve(dir, _)): _*))
+    val s = snapshotAt(spark, dir, version)
+    val kept = pruneFileList(spark, dir, s.files, preds)
+    // nothing kept: the full scan only lends its schema to a zero-row read
+    val base = scan(spark, dir, s, if (kept.isEmpty) s.files else kept)
     // numeric predicate values against a TIMESTAMP column are epoch
     // MICROS (the StatsPred doc's numeric form — the same interpretation
     // predTsMicros uses for pruning). A bare lit(n) would be
@@ -1727,8 +1562,9 @@ object ManifestTable {
     val vs = versions(spark, dir)
     import spark.implicits._
     vs.map { v =>
-      val files = manifestFiles(fs, dir, v)
-      val nDel = manifestDeletes(fs, dir, v).size.toLong
+      val s = snapshot(fs, dir, v)
+      val files = s.files
+      val nDel = s.deletes.size.toLong
       val stats = statsFor(fs, dir, files)
       val rows: Option[Long] =
         if (files.nonEmpty && files.forall(f =>
@@ -1780,7 +1616,8 @@ object ManifestTable {
     drop.foreach(v => fs.delete(new Path(manifestDir(dir), s"v$v.manifest"), false))
     // absolute entries (shallow-clone references into a SOURCE table) are
     // not this table's batches: vacuum only sweeps LOCAL batch dirs
-    val live = keep.flatMap(v => manifestFiles(fs, dir, v))
+    val kept = keep.map(snapshot(fs, dir, _))
+    val live = kept.flatMap(_.files)
       .filterNot(isAbsEntry)
       .map(f => f.split('/').take(2).mkString("/")).toSet // live batch dirs
     val dataRoot = new Path(dir, "data")
@@ -1792,8 +1629,7 @@ object ManifestTable {
     // same sweep for row-level delete sidecars: a sidecar no retained
     // manifest references is invisible garbage (absolute entries — a
     // clone's references into its source — are the source's to vacuum)
-    val liveDel = keep.flatMap(v => manifestDeletes(fs, dir, v))
-      .filterNot(isAbsEntry).toSet
+    val liveDel = kept.flatMap(_.deletes).filterNot(isAbsEntry).toSet
     val delRoot = new Path(dir, "_deletes")
     if (fs.exists(delRoot))
       fs.listStatus(delRoot).foreach { st =>

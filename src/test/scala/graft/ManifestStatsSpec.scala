@@ -19,9 +19,10 @@ class ManifestStatsSpec extends AnyFunSuite with SparkFixture {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Write `df` as a manifest batch dir, run BOTH stats paths, return
-    * (footerLines, scanLines) as sets. */
+    * (footerLines, scanLines) in sidecar order (files by name, columns in
+    * request order) — equal sequences mean byte-identical sidecars. */
   private def both(df: org.apache.spark.sql.DataFrame, cols: Seq[String])
-      : (Option[Set[String]], Set[String]) = {
+      : (Option[Seq[String]], Seq[String]) = {
     val dir = s"/tmp/graft_statspec_${java.util.UUID.randomUUID().toString.take(8)}"
     val rel = "data/b0"
     val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
@@ -33,11 +34,11 @@ class ManifestStatsSpec extends AnyFunSuite with SparkFixture {
     }
     val fs = fsOf(dir)
     val footer = graft.operators.ManifestTable
-      .footerStatsLines(spark, fs, dir, rel, cols, df.schema).map(_.toSet)
+      .footerStatsLines(spark, fs, dir, rel, cols, df.schema)
     graft.operators.ManifestTable.writeStatsScan(spark, fs, dir, rel, cols)
     val in = fs.open(new Path(s"$dir/$rel/_stats.tsv"))
     val scan = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toSet finally in.close()
+      .map(_.trim).filter(_.nonEmpty).toList finally in.close()
     (footer, scan)
   }
 
@@ -138,12 +139,12 @@ class ManifestStatsSpec extends AnyFunSuite with SparkFixture {
       Seq("l", "d"), df.schema)
     val in = fs.open(new Path(s"$dir/$rel/_stats.tsv"))
     val mixed = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toSet finally in.close()
+      .map(_.trim).filter(_.nonEmpty).toList finally in.close()
     graft.operators.ManifestTable.writeStatsScan(spark, fs, dir, rel,
       Seq("l", "d"))
     val in2 = fs.open(new Path(s"$dir/$rel/_stats.tsv"))
     val scanned = try scala.io.Source.fromInputStream(in2, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toSet finally in2.close()
+      .map(_.trim).filter(_.nonEmpty).toList finally in2.close()
     assert(mixed == scanned)
     assert(names.size == 3)
   }

@@ -25,6 +25,25 @@ class ManifestTableSpec extends AnyFunSuite with SparkFixture with Matchers {
   private def asSet(d: org.apache.spark.sql.DataFrame) =
     d.collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
+  /** Batch dirs under `data/` and sidecars under `_deletes/` that no
+    * manifest of `dir` references: what an aborted write must not leave. */
+  private def unreferenced(dir: String): Seq[String] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def children(sub: String) = {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$sub")
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.map(s => s"$sub/${s.getPath.getName}")
+    }
+    val lines = ManifestTable.versions(spark, dir).flatMap { v =>
+      val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/_manifests/v$v.manifest"))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    }
+    (children("data") ++ children("_deletes"))
+      .filterNot(e => lines.exists(l => l.endsWith(e) || l.contains(e + "/")))
+  }
+
   test("append commits accumulate; replace commits swap the whole snapshot") {
     val dir = tmpDir()
     ManifestTable.commit(spark, dir, df(1L -> "a", 2L -> "b")) shouldBe 1L
@@ -120,8 +139,10 @@ class ManifestTableSpec extends AnyFunSuite with SparkFixture with Matchers {
       ManifestTable.commit(spark, dir, mergedB, replace = true,
         readVersion = readV)
     }
-    // nothing of B leaked: head is exactly A's merge
+    // nothing of B leaked: head is exactly A's merge, and the refused
+    // replace deleted the batch it had written
     asSet(ManifestTable.read(spark, dir)) shouldBe Set(1L -> "a", 2L -> "b")
+    unreferenced(dir) shouldBe Nil
     // B's documented retry: re-read the new head, recompute, commit
     val head = ManifestTable.versions(spark, dir).last
     val retried = Upsert.merge(
@@ -1387,5 +1408,97 @@ class ManifestTableSpec extends AnyFunSuite with SparkFixture with Matchers {
     fDel2 shouldBe vA2
     fMor2 shouldBe vA3
     snap(dirB, fMor2) shouldBe snap(dirA, vA3)
+  }
+
+  // ---- serializability of concurrent writers ----
+
+  /** Three seeded writers race ~6 ops each (blind append, append and
+    * replace at a read version, deleteWhere, upsertMor) on one table.
+    * Committed versions must be dense, replaying the committed ops in
+    * version order through a pure row model must give every snapshot, and
+    * an op refused with ConcurrentModificationException must leave no row
+    * and no unreferenced file behind. */
+  private def serializable(dir: String, cas: graft.operators.CommitCas,
+      seed: Long): Unit = {
+    type Rows = Vector[(Long, String)]
+    case class Done(kind: String, v: Long, rv: Long, model: Rows => Rows)
+    ManifestTable.commit(spark, dir, df((0L until 12L).map(_ -> "base"): _*),
+      cas = cas) shouldBe 1L
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[Done]
+    val aborted = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = (0 until 3).map { w =>
+      new Thread(() =>
+        try {
+          start.await()
+          val rnd = new scala.util.Random(seed * 31 + w)
+          (0 until 6).foreach { i =>
+            val tag = s"w$w-$i"
+            val fresh = Vector(1000L + 100 * w + 10 * i, 1001L + 100 * w + 10 * i)
+              .map(_ -> tag)
+            val rv = ManifestTable.versions(spark, dir).last
+            try done.add(rnd.nextInt(5) match {
+              case 0 => Done("append", ManifestTable.commit(spark, dir,
+                df(fresh: _*), cas = cas), -1L, _ ++ fresh)
+              case 1 => Done("append@rv", ManifestTable.commit(spark, dir,
+                df(fresh: _*), readVersion = rv, cas = cas), rv, _ ++ fresh)
+              case 2 =>
+                val r = rnd.nextInt(3)
+                val next = ManifestTable.read(spark, dir, rv)
+                  .where(col("k") % 3 =!= r).union(df(fresh: _*))
+                Done("replace@rv", ManifestTable.commit(spark, dir, next,
+                  replace = true, readVersion = rv, cas = cas), rv,
+                  _.filter(_._1 % 3 != r) ++ fresh)
+              case 3 =>
+                val r = rnd.nextInt(5)
+                Done("deleteWhere", ManifestTable.deleteWhere(spark, dir,
+                  col("k") % 5 === r, cas), -1L, _.filter(_._1 % 5 != r))
+              case _ =>
+                val ups = Vector(rnd.nextInt(12).toLong -> tag, fresh.head)
+                val keys = ups.map(_._1).toSet
+                Done("upsertMor", ManifestTable.upsertMor(spark, dir,
+                  df(ups: _*), Seq("k"), cas), -1L,
+                  _.filterNot(r => keys(r._1)) ++ ups)
+            })
+            catch {
+              case _: java.util.ConcurrentModificationException => aborted.add(tag)
+            }
+          }
+        } catch { case t: Throwable => errs.add(t) })
+    }
+    threads.foreach(_.start()); start.countDown()
+    threads.foreach(_.join(120000))
+    errs.asScala.toSeq shouldBe Seq.empty
+    val ops = done.asScala.toSeq.sortBy(_.v)
+    ops.size + aborted.size shouldBe 18
+    val n = ManifestTable.versions(spark, dir).last
+    ManifestTable.versions(spark, dir) shouldBe (1L to n)
+    // every version past the base is some committed op's; a deleteWhere
+    // that matched nothing returns the head it read without publishing
+    (ops.map(_.v).toSet + 1L) shouldBe (1L to n).toSet
+    val published = ops.filterNot(_.kind == "deleteWhere")
+    published.map(_.v).distinct.size shouldBe published.size
+    ops.filter(_.kind == "replace@rv").foreach(o => o.v shouldBe o.rv + 1)
+    // an append at a read version commits only if no replace retracted
+    // the files it read in between
+    ops.filter(_.kind == "append@rv").foreach(o =>
+      ops.exists(r => r.kind == "replace@rv" && r.v > o.rv && r.v < o.v) shouldBe false)
+    var model: Vector[(Long, String)] = (0L until 12L).map(_ -> "base").toVector
+    (1L to n).foreach { v =>
+      ops.filter(_.v == v).foreach(o => model = o.model(model))
+      val rows = ManifestTable.read(spark, dir, v).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+      withClue(s"snapshot v$v: ") { rows.sorted shouldBe model.sorted }
+      rows.map(_._2).filter(aborted.asScala.toSet) shouldBe Nil
+    }
+    unreferenced(dir) shouldBe Nil
+  }
+
+  test("concurrent writers serialize: dense versions, every snapshot is the " +
+      "replay of the committed ops, refused ops leave nothing") {
+    serializable(tmpDir(), graft.operators.RenameCas, seed = 7L)
+    serializable(clobberDir(),
+      graft.operators.LockedCas(staleLockMs = 60000L, pollMs = 5L), seed = 11L)
   }
 }

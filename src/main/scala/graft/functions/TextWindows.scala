@@ -5,10 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Shared word-window stream: (doc_id, w) where w is the space-joined
   * n-token sliding window of `text`. Shaped as explode(sequence) +
-  * per-row slice-join — O(windows × n) by construction; exploding a
-  * computed `transform(...)` array instead would make codegen re-derive
-  * the whole window array per emitted element (the documented O(L²)
-  * trap). Docs under n tokens have no windows and drop. Within-doc
+  * per-row slice-join — O(windows × n) by construction. The generator's
+  * input is an expression, not an attribute, so Catalyst's
+  * `InferFiltersFromGenerate` adds no `size(...) > 0` Filter; an inner
+  * explode of an ALIASED `transform(...)` array gets one, and predicate
+  * pushdown moves it below the alias, where the lambda re-splits the
+  * text per element (the O(L²) trap [[graft.queries.Llm.shingleRows]]
+  * documents). Docs under n tokens have no windows and drop. Within-doc
   * duplicate windows pass through — callers distinct/aggregate per their
   * own semantics. ONE definition for the three window consumers
   * (text_repetition, text_boilerplate, Contamination), so tokenization
@@ -27,8 +30,8 @@ object TextWindows {
 
   /** Position-carrying variant of [[wordWindows]]: (doc_id, i, w) where
     * `i` is the 0-based token offset of the window start. Same
-    * explode(sequence) + slice-join shape (never the transform-array
-    * O(L²) trap); the extra column is the int offset the explode already
+    * explode(sequence) + slice-join shape (no inferred Generate filter,
+    * see above); the extra column is the int offset the explode already
     * produces, so the plan is identical to wordWindows plus one kept
     * attribute. Consumer: `dedup_spans`, which needs offsets to merge
     * duplicated windows into maximal span extents.
@@ -46,9 +49,10 @@ object TextWindows {
   /** Fixed-size token tiling: (doc_id, chunk_idx, chunk) with `size`-token
     * chunks at `stride` (overlap = size − stride); chunk count is
     * 1 + (n−1) div stride, so every token lands in ≥1 chunk and chunk_idx
-    * is dense from 0. Unlike [[wordWindows]] this explodes a computed
-    * transform(...) array — fine here because chunks per doc are FEW
-    * (n/stride, single digits), not the many-window O(L²) path. ONE
+    * is dense from 0. Unlike [[wordWindows]] this explodes a
+    * transform(...) array — passed to posexplode as an expression, not
+    * an aliased attribute, so no Generate filter is inferred and the
+    * array is built once per doc (chunks per doc are few: n/stride). ONE
     * definition for the two tiling consumers (chunk_text, dedup_chunks),
     * so chunk geometry can never silently diverge between them.
     */

@@ -86,18 +86,30 @@ object Llm {
         expr("transform(sequence(0, size(tk)-3), i -> concat(tk[i], ' ', tk[i+1], ' ', tk[i+2]))"))
         .as("ss"))
 
-  /** Per-doc distinct 3-gram shingles, exploded: (doc_id, s).
+  /** Per-shingle rows of a shingle-array frame (doc_id, ss) from
+    * [[shingleArrays]]: (doc_id, n, s, h) with n = the doc's
+    * distinct-shingle count and h = xxhash64(s). The one place the dedup
+    * family turns shingle arrays into rows; callers select the columns
+    * they need. The count rides the exploded rows (8 bytes) and is
+    * grouped alongside the pair, so NO post-aggregation join against a
+    * sizes table is needed — the candidate-pair stream (orders of
+    * magnitude larger than the final pair set; 1.1M vs 256 at sf0.1) goes
+    * straight from the count aggregate into the jac filter.
     *
-    * The array table is persisted before the explode: generating from a
-    * COMPUTED `array_distinct(transform(...))` makes codegen re-derive the
-    * array per emitted element (~20× slower, measured); over a cached
-    * column the explode is a plain O(1)-per-element loop. One tiny row per
-    * doc — the persist is registered on `tr`, so the operator body frees it
-    * once its result is sealed (no reliance on harness clearCache).
+    * The generator is `explode_outer`, not `explode`. For an inner
+    * explode of an attribute, Catalyst's `InferFiltersFromGenerate` adds
+    * `size(ss) > 0 AND isnotnull(ss)`; predicate pushdown then moves that
+    * Filter below the projection that defines ss and inlines the alias,
+    * so the interpreted `transform` lambda re-evaluates
+    * `split(text, ' ')` three times per shingle — O(L²) per document,
+    * ahead of the explode. The outer form infers no filter, and it is
+    * exact here: [[shingleArrays]] keeps only docs with ≥ 3 tokens, so
+    * ss is never null or empty and no null-padded row is emitted.
     */
-  private[graft] def shingles(docs: DataFrame, tr: graft.operators.Tracked): DataFrame =
-    tr.persist(shingleArrays(docs))
-      .select(col("doc_id"), explode(col("ss")).as("s"))
+  private[graft] def shingleRows(arrays: DataFrame): DataFrame =
+    arrays.select(col("doc_id"), size(col("ss")).cast("long").as("n"),
+        explode_outer(col("ss")).as("s"))
+      .withColumn("h", xxhash64(col("s")))
 
   /** Unordered exact n-gram (3-shingle) Jaccard near-dup pairs
     * (da, db, jac) at threshold `tau` — the shared kernel behind
@@ -136,20 +148,7 @@ object Llm {
     * no eager job, no cached block (see [[intersectionCounts]]). */
   private[graft] def pairIntersections(docsRaw: DataFrame,
       dfCap: Int = hotShingleDfCap): DataFrame =
-    intersectionCounts(hashedShingles(docsRaw), dfCap)
-
-  /** Per-doc distinct 3-gram shingles, exploded and hashed:
-    * (doc_id, n, s, h) with n = the doc's distinct-shingle count and
-    * h = xxhash64(s). The count rides the exploded rows (8 bytes) and is
-    * grouped alongside the pair, so NO post-aggregation join against a
-    * sizes table is needed — the candidate-pair stream (orders of
-    * magnitude larger than the final pair set; 1.1M vs 256 at sf0.1) goes
-    * straight from the count aggregate into the jac filter. */
-  private[graft] def hashedShingles(docsRaw: DataFrame): DataFrame =
-    shingleArrays(docsRaw)
-      .select(col("doc_id"), size(col("ss")).cast("long").as("n"),
-        explode(col("ss")).as("s"))
-      .withColumn("h", xxhash64(col("s")))
+    intersectionCounts(shingleRows(shingleArrays(docsRaw)), dfCap)
 
   /** Pair intersection counts over a (doc_id, n, s, h) shingle frame.
     *
@@ -283,9 +282,7 @@ object Llm {
         maxBucket = 65536, tr = tr)
       // exact |A∩B| re-rank over 64-bit-hashed shingles — dedup_minhash's
       // scorer verbatim: work ∝ candidates × shingles/doc, never corpus²
-      val shh = docs.select(col("doc_id"), size(col("ss")).cast("long").as("n"),
-          explode(col("ss")).as("s"))
-        .select(col("doc_id"), col("n"), xxhash64(col("s")).as("h"))
+      val shh = shingleRows(docs)
       cand
         .join(shh.select(col("doc_id").as("a_id"), col("n").as("na"), col("h")), "a_id")
         .join(shh.select(col("doc_id").as("b_id"), col("n").as("nb"), col("h")), Seq("b_id", "h"))
@@ -408,8 +405,6 @@ object Llm {
       val docs = tr.persist(shingleArrays(t(s, sf, "documents")))
       val cand = minhashCandidates(docs, nBands = 8, rowsPerBand = 2,
         maxBucket = 4096, tr = tr)
-      val sh = docs.select(col("doc_id"), size(col("ss")).cast("long").as("n"),
-        explode(col("ss")).as("s"))
       // exact |A∩B| per candidate pair via two codegen'd hash joins over
       // 64-bit-hashed shingles (longs shuffle/probe far cheaper than
       // strings; a cross-shingle hash collision could only inflate jac —
@@ -418,7 +413,7 @@ object Llm {
       // candidate set is hinted only by its true runtime size: no explicit
       // broadcast() — it is corpus-proportional, and AQE's runtime stats
       // pick broadcast when it fits and shuffle joins when it doesn't
-      val shh = sh.select(col("doc_id"), col("n"), xxhash64(col("s")).as("h"))
+      val shh = shingleRows(docs)
       tr.seal(cand
           .join(shh.select(col("doc_id").as("a_id"), col("n").as("na"), col("h")), "a_id")
           .join(shh.select(col("doc_id").as("b_id"), col("n").as("nb"), col("h")), Seq("b_id", "h"))

@@ -104,8 +104,8 @@ object TextAnalysis {
   private[graft] def simhashBandPairs(docsRaw: org.apache.spark.sql.DataFrame,
       maxBucket: Int, tr: graft.operators.Tracked): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = Llm.shingles(docsRaw, tr)
-      .select(col("doc_id"), xxhash64(col("s")).as("h"))
+    val toks = Llm.shingleRows(Llm.shingleArrays(docsRaw))
+      .select(col("doc_id"), col("h"))
     // one ALGEBRAIC bit-vote aggregator ([[graft.functions.Udx.SimHashAgg]])
     // instead of the r3 collect_list gather + Scala-UDF fold: votes
     // partial-aggregate map-side, so only a 64-int buffer per doc ever
@@ -702,9 +702,10 @@ object TextAnalysis {
     // quality cut a training pipeline applies before dedup: per doc, the
     // duplicated-3-gram fraction (1 − distinct/total windows) and the
     // highest single-window multiplicity. Shape: explode(sequence) +
-    // per-row slice-concat (the Contamination window idiom — exploding a
-    // computed transform(...) array would make codegen re-derive the
-    // whole window list per element, the documented O(L²) trap), then a
+    // per-row slice-concat (the Contamination window idiom — an inner
+    // explode of an aliased transform(...) array would get an inferred
+    // Generate filter, pushed below the alias, that re-splits the text
+    // per element: the O(L²) trap Llm.shingleRows documents), then a
     // two-level hash agg: (doc, window) counts → per-doc totals. Narrow
     // map + map-side-combined aggs at any scale; docs under 3 tokens have
     // no windows and drop, like the other window operators.

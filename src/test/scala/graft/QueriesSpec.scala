@@ -485,6 +485,47 @@ class QueriesSpec extends AnyFunSuite with SparkFixture with Matchers {
     got((1L, 3L)) shouldBe 1L
   }
 
+  test("shingle rows match a pure-Scala model; no inferred filter " +
+      "re-runs the shingle lambda") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction,
+      XxHash64Function}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val texts = Seq[(Long, String)](
+      1L -> null,
+      2L -> "",
+      3L -> "two tokens",
+      4L -> "exactly three tokens",
+      5L -> "a b c a b c a b", // repeated shingles inside one doc
+      6L -> "double  spaced  text here") // empty tokens between spaces
+    // an RDD source, not a local Seq: the optimizer folds a
+    // LocalRelation's projections and filters away before the plan check
+    val docs = spark.sparkContext.parallelize(texts, 2).toDF("doc_id", "text")
+    val rows = graft.queries.Llm.shingleRows(
+      graft.queries.Llm.shingleArrays(docs))
+    // an inner explode of ss would infer size(ss) > 0 and push it below
+    // the alias, where the transform lambda (and its splits) runs per
+    // shingle in a Filter on the scan
+    val lambdaFilters = rows.queryExecution.optimizedPlan.collect {
+      case f: Filter if f.condition.exists(_.isInstanceOf[HigherOrderFunction]) => f
+    }
+    lambdaFilters shouldBe empty
+    // Spark's split keeps empty tokens (limit -1); docs under 3 tokens and
+    // null text have no shingles; h is xxhash64 with Spark's seed 42
+    val model = texts.flatMap { case (d, text) =>
+      val tk = Option(text).map(_.split(" ", -1)).getOrElse(Array.empty[String])
+      val ss = tk.sliding(3).filter(_.length == 3).map(_.mkString(" "))
+        .toSeq.distinct
+      ss.map(s => (d, ss.size.toLong, s,
+        XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L)))
+    }
+    model.map(_._1).distinct shouldBe Seq(4L, 5L, 6L)
+    rows.as[(Long, Long, String, Long)].collect().toSeq
+      .sortBy(r => (r._1, r._3)) shouldBe model.sortBy(r => (r._1, r._3))
+  }
+
   test("caim_fit emits per-feature strictly-increasing boundary arrays") {
     val rows = SparkEntry.queries("caim_fit")(spark, sf001).collect()
     val byF = rows.groupBy(_.getString(0))

@@ -5,8 +5,8 @@ object Bench {
   /** JVM/codegen warmup so the first timed query of each family doesn't
     * absorb one-time class-loading: scan+agg+shuffle, window functions,
     * the typed top-k aggregator (encoder init), and MLlib KMeans + netlib
-    * BLAS (~2s of pure class initialization on first touch). Shared with
-    * [[Prof]] so both tools isolate query cost from class-init noise.
+    * BLAS (~2s of pure class initialization on first touch), so the timed
+    * pass measures query cost, not class-init noise.
     */
   def warmup(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
@@ -42,41 +42,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Partition sizing is byte-driven, not count-driven: AQE re-coalesces
-      // every post-shuffle stage toward the advisory byte size, so the
-      // kilobyte shuffles at bench SF collapse to one or two tasks while a
-      // 100 TB shuffle still fans out to thousands of partitions.
-      // parallelismFirst=false is what makes AQE honor the byte target
-      // instead of refusing to coalesce below #cores.
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32m")
-      // Scan-side parallelism floor (r18, guide §2.6/§6): every bench table
-      // is ONE small parquet file, and the default 4 MB openCostInBytes
-      // floors split size at 4 MB — so scan stages (and all map-side work:
-      // projection, shingling, partial aggregation) ran at parallelism 1-3
-      // on a 32-core machine. minPartitionNum = 2×cores asks the splitter
-      // for at least that many splits; openCost = 128 KB lets split size
-      // actually drop that far on megabyte inputs. Both are SCALE-NEUTRAL:
-      // at 100 TB bytes/minPartitionNum ≫ maxPartitionBytes, so split size
-      // stays maxPartitionBytes (128 MB) and the floor never binds — this
-      // is a floor on idle cores, not a cap tuned to local mode. Derived
-      // from SPARK_GRAFT_CPUS so the driver's low-core scaling runs keep
-      // the same bytes-per-core posture; override via env if needed.
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SCAN_PARTS",
-          (2 * cpus.toInt).toString))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     warmup(spark, sfDir)
     // sf as the basename only
     val sfTag = new java.io.File(sfDir).getName
@@ -269,8 +235,7 @@ object Bench {
     try {
       val ts = java.time.Instant.now().toString
       val histLine = s"""{"ts":"$ts",""" + detail.drop(1) + "\n"
-      java.nio.file.Files.write(java.nio.file.Paths.get(
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "BENCH_HISTORY.jsonl")),
+      java.nio.file.Files.write(java.nio.file.Paths.get(histPath),
         histLine.getBytes(java.nio.charset.StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)

@@ -27,7 +27,7 @@ object Knn {
     *
     * The neighbour frame needs no persist: topK → label join → vote →
     * argmax is one linear DAG consumed by a single action, so the search
-    * executes exactly once per run (Prof-verified round 11).
+    * executes exactly once per run.
     */
   def classify(emb: DataFrame, k: Int = 5, auto: Boolean = false,
       ivfThreshold: Long = 500000, nCells: Int = 16, nprobe: Int = 2): DataFrame = {

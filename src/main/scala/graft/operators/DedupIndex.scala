@@ -34,10 +34,20 @@ object DedupIndex {
     * minima from ONE codegen'd aggregate; a band's value hashes its r
     * consecutive minima (AND within a band, OR across bands:
     * P[candidate] = 1 − (1 − j^r)^b).
+    *
+    * The generator is `posexplode_outer` plus a filter on its position,
+    * not an inner `explode`: for an inner explode Catalyst infers
+    * `size(ss) > 0 AND isnotnull(ss)` and pushes it below the projection
+    * that defines ss, where [[graft.queries.Llm.shingleArrays]]' lambda
+    * re-splits each document once per shingle (see
+    * [[graft.queries.Llm.shingleRows]]). The outer form infers nothing;
+    * its position is null exactly on the padding row of a null or empty
+    * array, which is the row an inner explode would not emit.
     */
   def bandTable(shingled: DataFrame, nBands: Int = 8, rowsPerBand: Int = 2): DataFrame = {
     val k = nBands * rowsPerBand
-    shingled.select(col("doc_id"), explode(col("ss")).as("s"))
+    shingled.select(col("doc_id"), posexplode_outer(col("ss")).as(Seq("p", "s")))
+      .where(col("p").isNotNull)
       .groupBy("doc_id")
       .agg(array((0 until k).map(i => min(xxhash64(col("s"), lit(i)))): _*).as("mh"))
       .select(col("doc_id"), posexplode(expr(

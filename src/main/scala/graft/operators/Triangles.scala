@@ -201,7 +201,7 @@ object Triangles {
     val key = (System.identityHashCode(events.sparkSession),
       plan.semanticHash(), minShared, bucketCap, repartitionGate)
     edgeCache.synchronized {
-      // a harness clearCache() (Verify/Bench/Prof run one between queries)
+      // a harness clearCache() (Verify and Bench run one between queries)
       // silently unpersists the cached frame while this map still points
       // at it — serving that frame makes EVERY downstream consumer redo
       // the full corpus→edge pipeline (a union alone recomputes it twice).

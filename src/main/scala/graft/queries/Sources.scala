@@ -750,7 +750,7 @@ object Sources {
     // through the Morton interleave — each rewritten file carries a
     // bounded 2-D box in its renewed stats sidecar and `readPruned`'s
     // box scan skips files a 1-D sort must keep (ManifestTableSpec
-    // asserts the ≥-1-D margin; SkipProf measures it at scale). The
+    // asserts the ≥-1-D margin). The
     // oracle is the same filtered aggregate over plain events — layout
     // is a pure physical rewrite, values never move.
     "manifest_zorder" -> ((s, sf) => {

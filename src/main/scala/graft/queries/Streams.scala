@@ -26,10 +26,10 @@ object Streams {
     * "regression" (0.62 → 2.06 s) was an artifact of the old fully-
     * memoized dirs: Bench's outlier-retry pass re-ran the query against
     * an existing checkpoint, measured a no-op drain, and min() reported
-    * that — the number measured nothing. MsrcProf pins the real split
-    * (staging ≈ 0.9 s fixture, drain ≈ 0.7 s of which TxnSink addBatch
+    * that — the number measured nothing. The real split at sf0.1 (r16):
+    * staging ≈ 0.9 s fixture, drain ≈ 0.7 s of which TxnSink addBatch
     * ≈ 0.4 s, readback ≈ 0.6 s; the r15 admission-control and
-    * nested-converter suspects cost ≤ 14 ms of latestOffset+planning). */
+    * nested-converter suspects cost ≤ 14 ms of latestOffset+planning. */
   private val invocation = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The merge-on-read CDC SOURCE table shared by `stream_manifest_cdf`

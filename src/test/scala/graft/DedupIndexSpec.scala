@@ -86,4 +86,45 @@ class DedupIndexSpec extends AnyFunSuite with SparkFixture with Matchers {
     // pairs touching the 5 batch docs: cross 5×15 + within C(5,2)
     DedupIndex.candidates(ba, ix).count() shouldBe (5L * 15 + 10)
   }
+
+  test("band table infers no filter that re-splits documents; " +
+      "null, empty and null-element arrays band as an inner explode would") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.types._
+    // over unpersisted shingle arrays, an inner explode of ss infers
+    // size(ss) > 0 and pushes it below the alias, where the transform
+    // lambda splits the text once per shingle
+    val splitFilters = DedupIndex.bandTable(shingled).queryExecution.optimizedPlan
+      .collect {
+        case f: Filter if f.condition.exists {
+          case h: HigherOrderFunction => h.exists(_.isInstanceOf[StringSplit])
+          case _ => false
+        } => f
+      }
+    splitFilters shouldBe empty
+    // callers may hand any (doc_id, ss) frame; doc 6's empty row must add
+    // nothing to the band values of its other row
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("ss", ArrayType(StringType))))
+    val odd = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, Seq.empty[String]), Row(2L, null), Row(3L, Seq(null)),
+      Row(4L, Seq("x", null)), Row(5L, Seq("a b c", "b c d")),
+      Row(6L, Seq.empty[String]), Row(6L, Seq("x")))), schema)
+    // the reference is the inner-explode band table, whose inferred
+    // filter costs time but not rows
+    val k = 16
+    val reference = odd.select(col("doc_id"), explode(col("ss")).as("s"))
+      .groupBy("doc_id")
+      .agg(array((0 until k).map(i => min(xxhash64(col("s"), lit(i)))): _*).as("mh"))
+      .select(col("doc_id"), posexplode(expr(
+        "transform(sequence(0, 7), b -> xxhash64(slice(mh, b * 2 + 1, 2)))"))
+        .as(Seq("band", "bv")))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    val got = rows(DedupIndex.bandTable(odd))
+    got shouldBe rows(reference)
+    got.map(_._1).distinct shouldBe Seq(3L, 4L, 5L, 6L)
+  }
 }

@@ -244,13 +244,15 @@ class QueriesSpec extends AnyFunSuite with SparkFixture with Matchers {
     // sim_ann_ivf is excluded: KMeans|| initialization legitimately depends
     // on data partitioning (its own spec checks recall instead).
     val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(_ == "sim_ann_ivf")
+    // restore the session's own value; other suites share this SparkSession
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
     val failures = names.flatMap { name =>
-      val r8 = SparkEntry.queries(name)(spark, sf001).collect()
+      val base = SparkEntry.queries(name)(spark, sf001).collect()
       spark.conf.set("spark.sql.shuffle.partitions", 3)
       try {
         val r3 = SparkEntry.queries(name)(spark, sf001).collect()
-        if (r3.sameElements(r8)) None else Some(name)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", 8)
+        if (r3.sameElements(base)) None else Some(name)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
     }
     failures shouldBe empty
   }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
-/** Shared local SparkSession for the test suite (mirrors the harness confs:
-  * UTC, nanos-as-long, modest shuffle parallelism).
+/** Shared local SparkSession for the test suite: [[GraftSession.local]],
+  * the posture Bench times and Verify proves, so the tests exercise the
+  * same plans (AQE byte target, scan floor, 32 shuffle partitions).
   */
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 
@@ -18,14 +19,5 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkFixture {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", 8)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.local(8)
 }

@@ -15,7 +15,7 @@ sf0.1, not ten literal copies —
     count scales 10x at constant bucket size. Sharing days would make
     each bucket 10x BIGGER -> 100x pair fan-out, a different (quadratic)
     experiment.
-Remaining tables are copied verbatim (Prof's warmup + loader need them).
+Remaining tables are copied verbatim (Bench's warmup and the loader read them).
 
 Usage: python3 tools/scale10.py [srcDir=/root/testdata/sf0.1] [dst=/tmp/sf1]
                                 [replicas=10]

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** All-sources bounded-hop shortest distances — [[Sssp]]'s synchronous
   * Bellman–Ford relaxation run from EVERY node at once over the composite
@@ -14,17 +14,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (min-relaxation over integer costs) — bit-stable under any
   * partitioning.
   *
-  * Dispatch (the Components/PageRank/Sssp bounded-boundary move): below
-  * `distributedMinEdges` the edge list collects once and all sources
-  * relax in one driver loop (n·K·m integer ops — microseconds for
-  * graph-sized frames, vs 2 shuffles of stage latency per distributed
-  * round). At or above the gate each round is ONE equi-join of the
-  * (src, node, dist) frame with the persisted edges + one min-agg per
-  * (src, dst) + a left join back — the Pregel superstep with the source
-  * id carried as state, lineage RDD-snapped per round. At 100 TB the
-  * frame is n·reachable — use it for graph-sized aggregates (nation
-  * trade, cluster summaries), not billion-node all-pairs (that product
-  * is the ALGORITHM'S size, not a plan defect; sample sources instead).
+  * Over the two [[Superstep]] branches: below the gate all sources relax
+  * in one driver loop (n·K·m integer ops); at or above it each round is
+  * ONE equi-join of the (src, node, dist) frame with the persisted edges
+  * + one min-agg per (src, dst) + a full join back — the Pregel superstep
+  * with the source id carried as state. At 100 TB the frame is
+  * n·reachable — use it for graph-sized aggregates (nation trade, cluster
+  * summaries), not billion-node all-pairs (that product is the
+  * ALGORITHM'S size, not a plan defect; sample sources instead).
   */
 object AllSourceDistances {
 
@@ -35,55 +32,43 @@ object AllSourceDistances {
     * @return (src, node, dist) for pairs reachable within `rounds` edges,
     *         including the trivial (v, v, 0) rows */
   def run(nodes: DataFrame, edges: DataFrame, rounds: Int,
-      distributedMinEdges: Long = 500000L): DataFrame = {
-    val s = nodes.sparkSession
-    val tr = new Tracked
-    val e = tr.persist(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("cost").cast("long").as("cost")))
-    val n = tr.persist(nodes.select(col("node").cast("long").as("node")))
-    val eCnt = e.count()
-    if (eCnt < distributedMinEdges) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val ns = n.collect().map(_.getLong(0)).sorted
-      tr.free()
-      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-      for (source <- ns) {
-        var dist = ns.map(v => v -> (if (v == source) 0L else Inf)).toMap
-        for (_ <- 1 to rounds) {
-          val nd = scala.collection.mutable.Map(dist.toSeq: _*)
-          for ((u, v, c) <- es if dist(u) < Inf)
-            if (dist(u) + c < nd(v)) nd(v) = dist(u) + c
-          dist = nd.toMap
+      distributedMinEdges: Long = Superstep.DefaultMinEdges): DataFrame = {
+    val e = Superstep.longs(edges, "src", "dst", "cost")
+    val n = Superstep.longs(nodes, "node")
+    Superstep.collectBelow(e, distributedMinEdges)(Superstep.triple) match {
+      case Some(es) =>
+        val ns = Superstep.ids(n)
+        val rows = ns.toSeq.flatMap { source =>
+          val dist = Sssp.relaxFrom(ns, es, source, rounds)
+          ns.filter(dist(_) < Inf).map(v => Row(source, v, dist(v)))
         }
-        ns.filter(dist(_) < Inf).foreach(v => out += Row(source, v, dist(v)))
-      }
-      s.createDataFrame(java.util.Arrays.asList(out.toSeq: _*),
-        StructType(Seq(StructField("src", LongType),
-          StructField("node", LongType), StructField("dist", LongType))))
-    } else {
-      var kept: List[org.apache.spark.rdd.RDD[Row]] = Nil
-      def snap(df: DataFrame): DataFrame = {
-        val rdd = df.rdd.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        kept = rdd :: kept
-        s.createDataFrame(rdd, df.schema)
-      }
-      var d = snap(n.select(col("node").as("src"), col("node"),
-        lit(0L).as("dist")))
-      for (_ <- 1 to rounds) {
-        val relax = e.withColumnRenamed("src", "node")
-          .join(d.withColumnRenamed("node", "u")
-            .withColumnRenamed("src", "osrc"), col("u") === col("node"))
-          .groupBy(col("osrc").as("src"), col("dst").as("node"))
-          .agg(min(col("dist") + col("cost")).as("md"))
-        d = snap(d.join(relax, Seq("src", "node"), "full")
-          .select(col("src"), col("node"),
-            least(coalesce(col("dist"), lit(Inf)),
-              coalesce(col("md"), lit(Inf))).as("dist")))
-      }
-      val out = tr.seal(d.where(col("dist") < Inf))
-      kept.foreach(_.unpersist(blocking = false))
-      out
+        Superstep.frame(nodes.sparkSession, rows,
+          "src" -> LongType, "node" -> LongType, "dist" -> LongType)
+      case None =>
+        val tr = new Tracked
+        tr.seal(relax(n, tr.persist(e), rounds, tr))
     }
+  }
+
+  /** The distributed branch's K rounds over long-typed `nodes`/`edges`:
+    * (src, node, dist) of the reachable pairs, every round snapshotted on
+    * `tr` and left for the caller's seal to free. [[Betweenness]] reads
+    * its distances from here, on its own ledger. */
+  private[operators] def relax(nodes: DataFrame, edges: DataFrame,
+      rounds: Int, tr: Tracked): DataFrame = {
+    var d = tr.snap(nodes.select(col("node").as("src"), col("node"),
+      lit(0L).as("dist")))
+    for (_ <- 1 to rounds) {
+      val best = edges.withColumnRenamed("src", "node")
+        .join(d.withColumnRenamed("node", "u")
+          .withColumnRenamed("src", "osrc"), col("u") === col("node"))
+        .groupBy(col("osrc").as("src"), col("dst").as("node"))
+        .agg(min(col("dist") + col("cost")).as("md"))
+      d = tr.snap(d.join(best, Seq("src", "node"), "full")
+        .select(col("src"), col("node"),
+          least(coalesce(col("dist"), lit(Inf)),
+            coalesce(col("md"), lit(Inf))).as("dist")))
+    }
+    d.where(col("dist") < Inf)
   }
 }

@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   *    chain-shaped components similarity graphs produce (hops alone are
   *    O(eccentricity) — measured 15 on the τ=0.4 cosine graph). Every
   *    round shuffles only (vertex, label) pairs against the once-shuffled
-  *    cached edge list; per-round RDD snapshots truncate lineage.
+  *    cached edge list; per-round [[Tracked.snap]] snapshots truncate
+  *    lineage.
   *
   * Block bookkeeping: all per-round snapshots AND the final labels are
   * freed before returning — the result is sealed (eagerly materialized)
@@ -101,17 +102,8 @@ object Components {
       sym.unpersist(blocking = false)
       return out
     }
-    // Lineage truncation with explicit block bookkeeping: each checkpoint's
-    // frame is snapped to a persisted RDD we hold a handle to, so every
-    // snapshot is unpersisted before returning — localCheckpoint would
-    // strand O(rounds) block sets that neither Dataset.unpersist nor the
-    // SQL cache manager can free.
-    var kept: List[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = Nil
-    def snap(df: DataFrame): DataFrame = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      kept = rdd :: kept
-      spark.createDataFrame(rdd, df.schema)
-    }
+    // Lineage truncation: each round's frames are snapshotted on `inputs`
+    // (Tracked.snap), whose seal frees them once the result is counted.
     // One propagation round = a neighbour HOP then a POINTER JUMP. Hop:
     // every vertex u hears the current label of each neighbour v and
     // keeps the minimum. Jump: every vertex then adopts its label's own
@@ -124,7 +116,7 @@ object Components {
     // ~7 s of pure round overhead for a 920-edge graph); hop+jump makes
     // label depth contract superlinearly, O(log diameter) rounds total
     // (the CC-MR / Kiveris star-contraction idea expressed as one extra
-    // self-join of the SMALL label frame). The hop result is RDD-snapped
+    // self-join of the SMALL label frame). The hop result is snapshotted
     // BEFORE the jump so the self-join's two branches read one
     // materialization — composing it lazily would recompute the full
     // hop pipeline per branch and per enclosing reference (measured 2×
@@ -142,10 +134,10 @@ object Components {
       val heard = sym
         .join(cur.select(col("id").as("v"), col("lbl").as("nlbl")), "v")
         .groupBy(col("u").as("id")).agg(min(col("nlbl")).as("nmin"))
-      val hopped = snap(cur.join(heard, Seq("id"), "left")
+      val hopped = inputs.snap(cur.join(heard, Seq("id"), "left")
         .select(col("id"), col("lbl0"),
           least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl")))
-      val next = snap(hopped.join(
+      val next = inputs.snap(hopped.join(
           hopped.select(col("id").as("jid"), col("lbl").as("jlbl")),
           hopped("lbl") === col("jid"), "left")
         .select(hopped("id"), hopped("lbl0"),
@@ -155,7 +147,6 @@ object Components {
     }
     val out = inputs.seal(lbl.select(col("id"), col("lbl").as("cluster")))
     sym.unpersist(blocking = false)
-    kept.foreach(_.unpersist(blocking = false))
     out
   }
 }

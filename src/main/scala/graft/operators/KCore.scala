@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** k-core extraction with R bounded peeling rounds (Seidman, *Network
   * structure and minimum degree*, Social Networks 1983; the synchronous
@@ -18,17 +18,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * All arithmetic is exact BIGINT (degree counts, threshold compares), so
   * results are bit-stable under any partitioning — no float discipline.
   *
-  * Stats dispatch (the Components/PageRank/Sssp bounded-boundary move):
-  * below `distributedMinEdges` the aggregated edge list collects once and
-  * the R rounds are driver set arithmetic — zero per-round jobs, which is
-  * what a graph-sized frame deserves (each distributed round costs two
-  * shuffles of stage latency for microseconds of math). At or above the
-  * gate each round is one degree aggregate over the current edge frame +
-  * two semi-joins dropping incident edges — the synchronous peel as
-  * DataFrame algebra, edge lineage RDD-snapped per round so the plan
-  * never grows with R. At 100 TB the distributed branch holds: the edge
-  * frame only SHRINKS round over round, and the degree shuffle is the
-  * unavoidable exchange of distributed coreness.
+  * Over the two [[Superstep]] branches: below the gate the R rounds are
+  * driver set arithmetic; at or above it each round is one degree
+  * aggregate over the current edge frame + two semi-joins dropping
+  * incident edges — the synchronous peel as DataFrame algebra. At 100 TB
+  * the distributed branch holds: the edge frame only SHRINKS round over
+  * round, and the degree shuffle is the unavoidable exchange of
+  * distributed coreness.
   */
 object KCore {
 
@@ -36,55 +32,42 @@ object KCore {
     * @return (node, core_deg) survivors after `rounds` peels — core_deg
     *         is the node's degree INSIDE the surviving subgraph */
   def run(edges: DataFrame, k: Long, rounds: Int,
-      distributedMinEdges: Long = 500000L): DataFrame = {
-    val s = edges.sparkSession
-    val tr = new Tracked
-    val e0 = tr.persist(edges.select(col("u1").cast("long").as("u1"),
-      col("u2").cast("long").as("u2")))
-    val n0 = e0.count()
-    if (n0 < distributedMinEdges) {
-      var es = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
-      tr.free()
-      for (_ <- 1 to rounds) {
-        val deg = scala.collection.mutable.Map.empty[Long, Long]
-        for ((a, b) <- es) {
-          deg(a) = deg.getOrElse(a, 0L) + 1
-          deg(b) = deg.getOrElse(b, 0L) + 1
+      distributedMinEdges: Long = Superstep.DefaultMinEdges): DataFrame = {
+    val e0 = Superstep.longs(edges, "u1", "u2")
+    Superstep.collectBelow(e0, distributedMinEdges)(
+        r => (r.getLong(0), r.getLong(1))) match {
+      case Some(es0) =>
+        var es = es0
+        def degrees(): scala.collection.mutable.Map[Long, Long] = {
+          val deg = scala.collection.mutable.Map.empty[Long, Long]
+          for ((a, b) <- es) {
+            deg(a) = deg.getOrElse(a, 0L) + 1
+            deg(b) = deg.getOrElse(b, 0L) + 1
+          }
+          deg
         }
-        es = es.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
-      }
-      val deg = scala.collection.mutable.Map.empty[Long, Long]
-      for ((a, b) <- es) {
-        deg(a) = deg.getOrElse(a, 0L) + 1
-        deg(b) = deg.getOrElse(b, 0L) + 1
-      }
-      val rows: java.util.List[Row] = java.util.Arrays.asList(
-        deg.toSeq.sortBy(_._1).map { case (v, d) => Row(v, d) }: _*)
-      s.createDataFrame(rows, StructType(Seq(
-        StructField("node", LongType), StructField("core_deg", LongType))))
-    } else {
-      var kept: List[org.apache.spark.rdd.RDD[Row]] = Nil
-      def snap(df: DataFrame): DataFrame = {
-        val rdd = df.rdd.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        kept = rdd :: kept
-        s.createDataFrame(rdd, df.schema)
-      }
-      def degrees(e: DataFrame): DataFrame =
-        e.select(col("u1").as("node"))
-          .union(e.select(col("u2").as("node")))
-          .groupBy("node").agg(count(lit(1)).as("dg"))
-      var e = snap(e0)
-      for (_ <- 1 to rounds) {
-        val ok = degrees(e).where(col("dg") >= k).select("node")
-        e = snap(e
-          .join(ok.withColumnRenamed("node", "u1"), Seq("u1"), "left_semi")
-          .join(ok.withColumnRenamed("node", "u2"), Seq("u2"), "left_semi")
-          .select("u1", "u2"))
-      }
-      val out = tr.seal(degrees(e).withColumnRenamed("dg", "core_deg"))
-      kept.foreach(_.unpersist(blocking = false))
-      out
+        for (_ <- 1 to rounds) {
+          val deg = degrees()
+          es = es.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
+        }
+        Superstep.frame(edges.sparkSession,
+          degrees().toSeq.sortBy(_._1).map { case (v, d) => Row(v, d) },
+          "node" -> LongType, "core_deg" -> LongType)
+      case None =>
+        val tr = new Tracked
+        def degrees(e: DataFrame): DataFrame =
+          e.select(col("u1").as("node"))
+            .union(e.select(col("u2").as("node")))
+            .groupBy("node").agg(count(lit(1)).as("dg"))
+        var e = tr.snap(e0)
+        for (_ <- 1 to rounds) {
+          val ok = degrees(e).where(col("dg") >= k).select("node")
+          e = tr.snap(e
+            .join(ok.withColumnRenamed("node", "u1"), Seq("u1"), "left_semi")
+            .join(ok.withColumnRenamed("node", "u2"), Seq("u2"), "left_semi")
+            .select("u1", "u2"))
+        }
+        tr.seal(degrees(e).withColumnRenamed("dg", "core_deg"))
     }
   }
 }

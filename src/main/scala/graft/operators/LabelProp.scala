@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** Synchronous label propagation for community detection (Raghavan, Albert
   * & Kumara, *Near linear time algorithm to detect community structures in
@@ -20,16 +20,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * All arithmetic is exact BIGINT (label counts, label compares) — results
   * are bit-stable under any partitioning with zero float discipline.
   *
-  * Stats dispatch (the Components/PageRank/Sssp/KCore bounded-boundary
-  * move): below `distributedMinEdges` the aggregated edge list collects
-  * once and the R rounds are driver array sweeps — zero per-round jobs. At
-  * or above the gate each round is one join (neighbour label lookup), one
-  * (node, label) count aggregate, and one per-node window argmax — the
-  * synchronous update as DataFrame algebra, label lineage RDD-snapped per
-  * round so the plan never grows with R. At 100 TB the distributed branch
-  * holds: the per-round shuffle carries (node, label, count) triples —
-  * ids only, bounded by the edge count — and the argmax window partitions
-  * by node (≤ degree rows per partition), never a global sort.
+  * Over the two [[Superstep]] branches: below the gate the R rounds are
+  * driver array sweeps over a CSR adjacency; at or above it each round is
+  * one join (neighbour label lookup) and two hash aggregates — the
+  * (node, label) count, then a per-node `max_by` argmax over
+  * (count, −label) — the synchronous update as DataFrame algebra. At 100
+  * TB the distributed branch holds: each round shuffles (node, label,
+  * count) triples — ids only, bounded by the edge count — and never sorts.
   */
 object LabelProp {
 
@@ -37,89 +34,76 @@ object LabelProp {
     * @return (node, community) after `rounds` synchronous updates, one row
     *         per node appearing in `edges` */
   def run(edges: DataFrame, rounds: Int,
-      distributedMinEdges: Long = 500000L): DataFrame = {
-    val s = edges.sparkSession
-    val tr = new Tracked
-    val e0 = tr.persist(edges.select(col("u1").cast("long").as("u1"),
-      col("u2").cast("long").as("u2")))
-    val n0 = e0.count()
-    if (n0 < distributedMinEdges) {
-      val es = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
-      tr.free()
-      // dense CSR adjacency over sorted ids (the Triangles.linkScores
-      // layout): index order == id order, so "min label" compares work on
-      // indices of the CURRENT labels' values (labels are original ids)
-      val ids = {
-        val t = scala.collection.mutable.TreeSet.empty[Long]
-        es.foreach { case (a, b) => t += a; t += b }
-        t.toArray
-      }
-      val n = ids.length
-      val idxOf = ids.zipWithIndex.toMap
-      val deg = new Array[Int](n)
-      es.foreach { case (a, b) => deg(idxOf(a)) += 1; deg(idxOf(b)) += 1 }
-      val adj = Array.tabulate(n)(i => new Array[Int](deg(i)))
-      val fill = new Array[Int](n)
-      es.foreach { case (a, b) =>
-        val (ia, ib) = (idxOf(a), idxOf(b))
-        adj(ia)(fill(ia)) = ib; fill(ia) += 1
-        adj(ib)(fill(ib)) = ia; fill(ib) += 1
-      }
-      var lab = Array.tabulate(n)(i => ids(i))
-      for (_ <- 1 to rounds) {
-        val next = new Array[Long](n)
-        val cnt = scala.collection.mutable.LongMap.empty[Long]
-        var v = 0
-        while (v < n) {
-          cnt.clear()
-          adj(v).foreach { u => val l = lab(u); cnt(l) = cnt.getOrElse(l, 0L) + 1 }
-          var bestLab = Long.MaxValue; var bestC = 0L
-          cnt.foreach { case (l, c) =>
-            if (c > bestC || (c == bestC && l < bestLab)) { bestLab = l; bestC = c }
-          }
-          next(v) = bestLab
-          v += 1
+      distributedMinEdges: Long = Superstep.DefaultMinEdges): DataFrame = {
+    val e = Superstep.longs(edges, "u1", "u2")
+    Superstep.collectBelow(e, distributedMinEdges)(
+        r => (r.getLong(0), r.getLong(1))) match {
+      case Some(es) =>
+        // dense CSR adjacency over sorted ids (the Triangles.linkScores
+        // layout): index order == id order, so "min label" compares work on
+        // indices of the CURRENT labels' values (labels are original ids)
+        val ids = {
+          val t = scala.collection.mutable.TreeSet.empty[Long]
+          es.foreach { case (a, b) => t += a; t += b }
+          t.toArray
         }
-        lab = next
-      }
-      val rows: java.util.List[Row] = java.util.Arrays.asList(
-        ids.indices.map(i => Row(ids(i), lab(i))): _*)
-      s.createDataFrame(rows, StructType(Seq(
-        StructField("node", LongType), StructField("community", LongType))))
-    } else {
-      var kept: List[org.apache.spark.rdd.RDD[Row]] = Nil
-      def snap(df: DataFrame): DataFrame = {
-        val rdd = df.rdd.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        kept = rdd :: kept
-        s.createDataFrame(rdd, df.schema)
-      }
-      val adj = snap(e0.select(col("u1").as("u"), col("u2").as("v"))
-        .union(e0.select(col("u2").as("u"), col("u1").as("v"))))
-      var labels = snap(adj.select(col("u").as("node")).distinct()
-        .select(col("node"), col("node").as("lab")))
-      for (_ <- 1 to rounds) {
-        // per-node argmax as a HASH AGGREGATE, not a window (r14): the
-        // (count DESC, label ASC) winner is max_by over the (c, -lab)
-        // struct — (c, -lab) is unique per (node, lab) group, so the
-        // argmax is deterministic with no tie to break — which keeps the
-        // round in two pipelined hash aggs instead of paying a per-node
-        // SORT under a window (measured at the 100× corpus's 2.9M-edge
-        // graph: 55–79 s → see PLANS.md r14). Bit-identical to the window
-        // form and to the DuckDB oracle's row_number — GraphSpec pins
-        // branch equality and the independent reference.
-        labels = snap(adj
-          .join(labels.select(col("node").as("v"), col("lab")), Seq("v"))
-          .groupBy(col("u").as("node"), col("lab"))
-          .agg(count(lit(1)).as("c"))
-          .groupBy("node")
-          .agg(max_by(col("lab"), struct(col("c"), (-col("lab")).as("nl")))
-            .as("lab")))
-      }
-      val out = tr.seal(labels.select(col("node"),
-        col("lab").as("community")))
-      kept.foreach(_.unpersist(blocking = false))
-      out
+        val n = ids.length
+        val idxOf = ids.zipWithIndex.toMap
+        val deg = new Array[Int](n)
+        es.foreach { case (a, b) => deg(idxOf(a)) += 1; deg(idxOf(b)) += 1 }
+        val adj = Array.tabulate(n)(i => new Array[Int](deg(i)))
+        val fill = new Array[Int](n)
+        es.foreach { case (a, b) =>
+          val (ia, ib) = (idxOf(a), idxOf(b))
+          adj(ia)(fill(ia)) = ib; fill(ia) += 1
+          adj(ib)(fill(ib)) = ia; fill(ib) += 1
+        }
+        var lab = Array.tabulate(n)(i => ids(i))
+        for (_ <- 1 to rounds) {
+          val next = new Array[Long](n)
+          val cnt = scala.collection.mutable.LongMap.empty[Long]
+          var v = 0
+          while (v < n) {
+            cnt.clear()
+            adj(v).foreach { u => val l = lab(u); cnt(l) = cnt.getOrElse(l, 0L) + 1 }
+            var bestLab = Long.MaxValue; var bestC = 0L
+            cnt.foreach { case (l, c) =>
+              if (c > bestC || (c == bestC && l < bestLab)) { bestLab = l; bestC = c }
+            }
+            next(v) = bestLab
+            v += 1
+          }
+          lab = next
+        }
+        Superstep.frame(edges.sparkSession,
+          ids.indices.map(i => Row(ids(i), lab(i))),
+          "node" -> LongType, "community" -> LongType)
+      case None =>
+        val tr = new Tracked
+        val e0 = tr.persist(e)
+        val adj = tr.snap(e0.select(col("u1").as("u"), col("u2").as("v"))
+          .union(e0.select(col("u2").as("u"), col("u1").as("v"))))
+        var labels = tr.snap(adj.select(col("u").as("node")).distinct()
+          .select(col("node"), col("node").as("lab")))
+        for (_ <- 1 to rounds) {
+          // per-node argmax as a HASH AGGREGATE, not a window (r14): the
+          // (count DESC, label ASC) winner is max_by over the (c, -lab)
+          // struct — (c, -lab) is unique per (node, lab) group, so the
+          // argmax is deterministic with no tie to break — which keeps the
+          // round in two pipelined hash aggs instead of paying a per-node
+          // SORT under a window (measured at the 100× corpus's 2.9M-edge
+          // graph: 55–79 s → see PLANS.md r14). Bit-identical to the window
+          // form and to the DuckDB oracle's row_number — GraphSpec pins
+          // branch equality and the independent reference.
+          labels = tr.snap(adj
+            .join(labels.select(col("node").as("v"), col("lab")), Seq("v"))
+            .groupBy(col("u").as("node"), col("lab"))
+            .agg(count(lit(1)).as("c"))
+            .groupBy("node")
+            .agg(max_by(col("lab"), struct(col("c"), (-col("lab")).as("nl")))
+              .as("lab")))
+        }
+        tr.seal(labels.select(col("node"), col("lab").as("community")))
     }
   }
 }

@@ -1,15 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.storage.StorageLevel
 
-/** Block bookkeeping for multi-stage library operators (dedup, clustering):
-  * every intermediate a pipeline persists is registered on a Tracked handle
-  * list, and `seal` eagerly materializes the pipeline's final result before
-  * unpersisting every intermediate. This closes the r3 leak where query
-  * bodies persisted intermediates and relied on the harness's clearCache():
-  * a long-lived session composing dedup operators no longer accumulates
-  * pinned MEMORY_AND_DISK blocks.
+/** Block bookkeeping for multi-stage library operators (dedup, clustering,
+  * graph supersteps): every intermediate a pipeline persists or snapshots
+  * is registered on a Tracked handle list, and `seal` eagerly materializes
+  * the pipeline's final result before unpersisting every intermediate.
+  * This closes the r3 leak where query bodies persisted intermediates and
+  * relied on the harness's clearCache(): a long-lived session composing
+  * dedup or graph operators no longer accumulates pinned MEMORY_AND_DISK
+  * blocks.
   *
   * Ownership contract: the sealed RESULT is itself persisted (so downstream
   * actions never re-run the pipeline) and is registered as `owned`; callers
@@ -25,6 +27,7 @@ import org.apache.spark.storage.StorageLevel
   */
 final class Tracked {
   private var kept: List[DataFrame] = Nil
+  private var snaps: List[RDD[Row]] = Nil
   private var owned: List[DataFrame] = Nil
 
   /** Persist an intermediate and remember the handle. Handle-list updates
@@ -40,10 +43,27 @@ final class Tracked {
     p
   }
 
-  /** Unpersist every tracked intermediate (not sealed results). */
+  /** Snapshot one superstep of an iterative operator: persist `df`'s RDD
+    * and return a frame re-wrapped around it, so the next step's plan
+    * starts from this step's blocks instead of growing with every round.
+    * The RDD is registered here and freed like any intermediate — by
+    * `free`, so only after `seal`'s count has materialized the result.
+    * `localCheckpoint` would truncate lineage too, but it strands
+    * O(rounds) block sets that neither `Dataset.unpersist` nor the SQL
+    * cache manager can free; a handle held here can be. */
+  def snap(df: DataFrame): DataFrame = {
+    val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    synchronized { snaps = rdd :: snaps }
+    df.sparkSession.createDataFrame(rdd, df.schema)
+  }
+
+  /** Unpersist every tracked intermediate and snapshot (not sealed results). */
   def free(): Unit = {
-    val toFree = synchronized { val k = kept; kept = Nil; k }
+    val (toFree, toDrop) = synchronized {
+      val k = (kept, snaps); kept = Nil; snaps = Nil; k
+    }
     toFree.foreach(_.unpersist(blocking = false))
+    toDrop.foreach(_.unpersist(blocking = false))
   }
 
   /** Eagerly materialize `result` (persist + count — downstream actions read
@@ -59,7 +79,7 @@ final class Tracked {
     * plan that persisted nothing stays lazy, with no eager job and no
     * pinned block. */
   def sealIfHeld(result: DataFrame): DataFrame =
-    if (synchronized(kept.isEmpty)) result else seal(result)
+    if (synchronized(kept.isEmpty && snaps.isEmpty)) result else seal(result)
 
   /** [[seal]], returning the materialization count too — the row count the
     * eager count() already pays for, surfaced so callers dispatching on

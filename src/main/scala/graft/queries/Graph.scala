@@ -24,15 +24,13 @@ import graft.T.{Q, t}
   * (src, dst) weight aggregate — is ONE shot of ordinary shuffle work that
   * Catalyst plans like any star join, and it REDUCES the data to the
   * aggregated graph before any iteration touches it. The fixed point then
-  * runs through [[graft.operators.PageRank]]'s stats dispatch (the
-  * Components pattern): below the edge-count gate the bounded aggregated
-  * graph is collected once (sorted, so float order is layout-independent)
-  * and the rounds are driver arithmetic — zero per-round jobs, which is
-  * what a 25-node graph deserves (the all-distributed loop measured 5.2 s
-  * of pure stage latency for microseconds of math); at or above the gate
-  * the rounds stay distributed with RDD-snapped rank lineage, a
-  * once-computed dangling node set, and no per-round driver
-  * synchronization. At 100 TB (a billion-node user graph) the distributed
+  * runs over [[graft.operators.Superstep]]'s two branches: below the
+  * edge-count gate the bounded aggregated graph is collected once
+  * (sorted, so float order is layout-independent) and the rounds are
+  * driver arithmetic — zero per-round jobs, which is what a 25-node graph
+  * deserves; at or above the gate the rounds stay distributed with
+  * snapshotted rank lineage, a once-computed dangling node set, and no
+  * per-round driver synchronization. At 100 TB (a billion-node user graph) the distributed
   * branch holds: the rank frame shuffles on the join key each round — the
   * unavoidable exchange of distributed PageRank. GraphSpec pins both
   * branches to the identical fixed point on the corpus.
@@ -198,9 +196,9 @@ object Graph {
     // R converges; GraphSpec asserts R and R+1 agree on the corpus, so
     // the declared frame IS the 3-core here). Exact BIGINT throughout —
     // bit-stable under any partitioning. Rides the census edge pipeline;
-    // the peel dispatches through [[graft.operators.KCore]]'s stats gate
+    // the peel runs over [[graft.operators.Superstep]]'s two branches
     // (driver set arithmetic below 500k edges, per-round degree-agg +
-    // two semi-joins with RDD-snapped lineage above).
+    // two semi-joins above).
     // closeness centrality (round 12) — the "how near is everyone"
     // centrality completing the tier beside PageRank's influence
     // propagation (Bavelas 1950; the Wasserman–Faust 1994 normalization
@@ -304,9 +302,9 @@ object Graph {
     // (the graph_sssp / graph_kcore fixed-R contract; the oracle unrolls
     // the same R rounds as MATERIALIZED CTEs). Exact BIGINT counts and
     // label compares only — bit-stable under any partitioning. Rides the
-    // shared cached census edge frame and [[graft.operators.LabelProp]]'s
-    // stats dispatch (driver array sweeps below the 500k-edge gate,
-    // RDD-snapped per-round join + windowed argmax above it).
+    // shared cached census edge frame and [[graft.operators.Superstep]]'s
+    // two branches (driver array sweeps below the 500k-edge gate, a
+    // per-round join + two hash aggregates with a max_by argmax above).
     "graph_labelprop" -> ((s, sf) => {
       val (edges, _) = census(s, sf)
       val lp = graft.operators.LabelProp.run(edges, rounds = labelpropRounds)

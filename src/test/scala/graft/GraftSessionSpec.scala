@@ -9,19 +9,11 @@ class GraftSessionSpec extends AnyFunSuite with SparkFixture with Matchers {
 
   test("no source file outside GraftSession builds its own SparkSession") {
     // split so this file does not match itself
-    val needle = "SparkSession" + ".builder"
-    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
-      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f)
-        else Nil
-      }
-    val files = Seq("src/main", "src/test").flatMap(d => scalaFiles(new java.io.File(d)))
+    val needle = java.util.regex.Pattern.quote("SparkSession" + ".builder").r
+    val files = Seq("src/main", "src/test").flatMap(SourceScan.scalaFiles)
     files.exists(_.getName == "GraftSession.scala") shouldBe true
-    val builders = files.filter(_.getName != "GraftSession.scala").filter { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.mkString.contains(needle) finally src.close()
-    }.map(_.getPath)
+    val builders = SourceScan.matching(
+      files.filter(_.getName != "GraftSession.scala"), needle).map(_.getPath)
     builders shouldBe empty
   }
 

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import graft.operators.{Components, Tracked}
+import org.apache.spark.sql.DataFrame
+import graft.operators.{AllSourceDistances, Betweenness, Components, Hits,
+  KCore, LabelProp, PageRank, Sssp, Tracked}
 import graft.queries.Llm
 
 /** Storage-block hygiene (r3 judge finding "library-level persist leaks"):
@@ -126,5 +128,109 @@ class LeakSpec extends AnyFunSuite with SparkFixture with Matchers {
       sc.setJobDescription(null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("graph operators pin only their sealed result, and a driver-branch " +
+      "run launches no job beyond its own input collects") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // the sf0.01 trade graph: weighted, cost and undirected forms
+    val (o, c) = (T.t(spark, sf01c, "orders"), T.t(spark, sf01c, "customer"))
+    val (l, su) = (T.t(spark, sf01c, "lineitem"), T.t(spark, sf01c, "supplier"))
+    val w = o.join(c, o("o_custkey") === c("c_custkey"))
+      .join(l, l("l_orderkey") === o("o_orderkey"))
+      .join(su, l("l_suppkey") === su("s_suppkey"))
+      .where(col("c_nationkey") =!= col("s_nationkey"))
+      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
+      .agg(count(lit(1)).as("w"))
+    val nodes = T.t(spark, sf01c, "nation")
+      .select(col("n_nationkey").cast("long").as("node"))
+    val cost = w.select(col("src"), col("dst"),
+      expr("1000000L div (w + 1) + 1").cast("long").as("cost"))
+    val und = w.select(least(col("src"), col("dst")).cast("long").as("u1"),
+      greatest(col("src"), col("dst")).cast("long").as("u2")).distinct()
+    // (operator, run at a gate, the frames its driver branch must collect)
+    val ops: Seq[(String, Long => DataFrame, Seq[DataFrame])] = Seq(
+      ("PageRank", g => PageRank.run(nodes, w, 10, 0.85, g), Seq(w, nodes)),
+      ("Hits", g => Hits.run(nodes, w, 10, g), Seq(w, nodes)),
+      ("Sssp", g => Sssp.run(nodes, cost, 0L, 6, g), Seq(cost, nodes)),
+      ("AllSourceDistances", g => AllSourceDistances.run(nodes, cost, 6, g),
+        Seq(cost, nodes)),
+      ("KCore", g => KCore.run(und, 3L, 8, g), Seq(und)),
+      ("LabelProp", g => LabelProp.run(und, 4, g), Seq(und)),
+      ("Betweenness", g => Betweenness.run(nodes, cost, 6, g),
+        Seq(cost, nodes)))
+
+    // jobs per job description; a marker job seen by the listener means
+    // every earlier job start has been counted (events arrive in order)
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(d => seen.merge(d, 1, (a: Integer, b: Integer) => a + b))
+    }
+    val sc = spark.sparkContext
+    def jobs(desc: String)(body: => Unit): Int = {
+      sc.setJobDescription(desc)
+      try body finally sc.setJobDescription(null)
+      val marker = s"$desc-marker"
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.containsKey(marker) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      seen.containsKey(marker) shouldBe true
+      Option(seen.get(desc)).map(_.intValue).getOrElse(0)
+    }
+    def settle(before: Set[Int], bound: Int): Set[Int] = {
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (storedIds.diff(before).size > bound && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      storedIds.diff(before)
+    }
+
+    // every violation of every operator, so one run names them all
+    val violations = scala.collection.mutable.ArrayBuffer.empty[String]
+    def check(what: String, ok: Boolean): Unit = if (!ok) violations += what
+    sc.addSparkListener(listener)
+    try {
+      for ((name, run, inputs) <- ops) {
+        // driver branch: the bounded edge collect and the node collect are
+        // all it runs — no count, no cache, nothing after the collects
+        val before = storedIds
+        var out: DataFrame = null
+        val runJobs = jobs(s"$name-driver") { out = run(Long.MaxValue) }
+        val inputJobs = jobs(s"$name-inputs") {
+          inputs.head.limit(Int.MaxValue).collect()
+          inputs.tail.foreach(_.collect())
+        }
+        check(s"$name driver branch ran $runJobs jobs, its input collects " +
+          s"$inputJobs", runJobs == inputJobs)
+        check(s"$name driver result is empty", out.count() > 0L)
+        val driverLeft = settle(before, 0)
+        check(s"$name driver branch pinned ${driverLeft.size} blocks",
+          driverLeft.isEmpty)
+        // distributed branch: the sealed result is the one new block, and
+        // unpersisting it leaves none
+        val dist = run(0L)
+        check(s"$name distributed result is empty", dist.count() > 0L)
+        val held = settle(before, 1).size
+        check(s"$name distributed branch pinned $held blocks, not 1",
+          held == 1)
+        dist.unpersist()
+        val left = settle(before, 0).size
+        check(s"$name distributed branch left $left blocks after unpersist",
+          left == 0)
+      }
+    } finally sc.removeSparkListener(listener)
+    violations shouldBe empty
+  }
+
+  test("only Tracked persists an RDD under src/main") {
+    // superstep snapshots go through Tracked.snap, which frees them
+    val files = SourceScan.scalaFiles("src/main")
+    files.exists(_.getName == "Tracked.scala") shouldBe true
+    SourceScan.matching(files.filter(_.getName != "Tracked.scala"),
+      """\.rdd\s*\.persist\(""".r).map(_.getPath) shouldBe empty
   }
 }

@@ -18,9 +18,10 @@ import org.apache.spark.sql.types.StructType
   * same data — a property AmevaSpec witnesses on this corpus).
   *
   * Scale design is CAIM's, shared literally: [[SupervisedHistogram]]
-  * builds the one-pass distributed per-(feature, value, class) histogram
-  * with the equal-frequency candidate cap, only the compressed histogram
-  * crosses to the driver, and the greedy search is driver-side prefix-sum
+  * builds the per-(feature, value, class) histogram in one scan of the
+  * source (two above its bounded collect) with the equal-frequency
+  * candidate cap, only a bounded histogram crosses to the driver, and
+  * the greedy search is driver-side prefix-sum
   * arithmetic. χ² decomposes per interval (the class marginals C_s are
   * global constants), so adding a cut re-scores ONE split interval in
   * O(S) — the same incremental trick as CAIM's term sum. The fitted model
@@ -47,20 +48,8 @@ class AmevaDiscretizer(override val uid: String)
 
   override def fit(ds: Dataset[_]): CAIMDiscretizerModel = {
     transformSchema(ds.schema)
-    val feats = $(inputCols)
-    val (labels, byFeat) =
-      SupervisedHistogram.collect(ds.toDF(), feats, $(labelCol), $(maxCandidates))
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val splits = Await.result(
-      Future.sequence(feats.indices.map { fi =>
-        Future {
-          val (values, counts) = byFeat.getOrElse(fi,
-            (Array.empty[Double], Array.empty[Array[Long]]))
-          AmevaDiscretizer.amevaSelect(values, counts, labels.length)
-        }
-      }), Duration.Inf).toArray
+    val splits = SupervisedHistogram.splits(ds.toDF(), $(inputCols), $(labelCol),
+      $(maxCandidates))(AmevaDiscretizer.amevaSelect)
     copyValues(new CAIMDiscretizerModel(uid, splits).setParent(this))
   }
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, NumericType, StructField, StructType}
 
 /** Shared params for the CAIM estimator/model pair. */
-private[ml] trait CAIMParams extends Params {
+private[graft] trait CAIMParams extends Params {
   /** Continuous feature columns to discretize. */
   final val inputCols = new StringArrayParam(this, "inputCols", "feature columns")
   /** Output column per input column (same order). */
@@ -37,13 +37,16 @@ private[ml] trait CAIMParams extends Params {
   * NumPy arrays, per SURVEY.md §0/§3.0; the empty reference checkout means
   * paper semantics govern, SURVEY.md §7 R7).
   *
-  * Scale design (SURVEY.md §3.3): the only full-data pass is ONE distributed
-  * aggregation building, for all features at once, the per-(feature, value,
-  * class) count histogram — map-side combined, shuffled once on the compound
-  * key. If a feature has more than `maxCandidates` distinct values the
-  * histogram is compressed to an equal-frequency grid first (still
-  * distributed). Only the compressed histogram (≤ maxCandidates × classes
-  * cells per feature) is collected; the greedy boundary search is a pure
+  * Scale design (SURVEY.md §3.3): one distributed aggregation builds, for
+  * all features at once, the per-(feature, value, class) count histogram —
+  * map-side combined, shuffled once on the compound key
+  * ([[SupervisedHistogram]]). A feature with more than `maxCandidates`
+  * distinct values is compressed to an equal-frequency grid, so at most
+  * maxCandidates × classes cells per feature reach the search. A
+  * histogram of fewer than features × maxCandidates rows reaches the
+  * driver whole in one bounded collect — one scan of the source, the
+  * grid computed on the driver; a larger one is cached and compressed on
+  * the cluster — two scans. The greedy boundary search is a pure
   * driver-side loop over prefix sums, O(cuts × candidates × classes) per
   * feature. `transform` is a narrow Bucketizer pass — splits ship in the
   * task closure; no shuffle, no further driver involvement.
@@ -71,32 +74,8 @@ class CAIMDiscretizer(override val uid: String)
 
   override def fit(ds: Dataset[_]): CAIMDiscretizerModel = {
     transformSchema(ds.schema)
-    val feats = $(inputCols)
-
-    // The shared distributed histogram ([[SupervisedHistogram]] — round 11
-    // extraction, behavior-identical: one pass for all features, candidate
-    // compression onto the distributed equal-frequency grid, only the
-    // compressed histogram crossing the executor→driver boundary).
-    val (labels, byFeat) =
-      SupervisedHistogram.collect(ds.toDF(), feats, $(labelCol), $(maxCandidates))
-    val nClasses = labels.length
-
-    // Per-feature greedy runs are independent: fan them out across driver
-    // cores (the moral equivalent of a per-feature worker pool), each over
-    // its own pre-sliced piece of the collected histogram. Future.sequence
-    // keeps the output order aligned with inputCols.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val splits = Await.result(
-      Future.sequence(feats.indices.map { fi =>
-        Future {
-          val (values, counts) = byFeat.getOrElse(fi,
-            (Array.empty[Double], Array.empty[Array[Long]]))
-          CAIMDiscretizer.greedySelect(values, counts, nClasses)
-        }
-      }), Duration.Inf).toArray
-
+    val splits = SupervisedHistogram.splits(ds.toDF(), $(inputCols), $(labelCol),
+      $(maxCandidates))(CAIMDiscretizer.greedySelect)
     copyValues(new CAIMDiscretizerModel(uid, splits).setParent(this))
   }
 

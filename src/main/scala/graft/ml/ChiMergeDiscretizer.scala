@@ -16,12 +16,12 @@ import org.apache.spark.sql.types.StructType
   * would erase a class-distribution change the data supports.
   *
   * Scale design is CAIM's, shared literally: [[SupervisedHistogram]]
-  * builds the one-pass distributed per-(feature, value, class) histogram
-  * with the equal-frequency candidate cap, only the compressed histogram
-  * (≤ maxCandidates × classes cells) crosses to the driver, and the merge
-  * loop is driver prefix-sum arithmetic. A merge changes the pair χ² of
-  * at most its two surviving neighbours, so each step recomputes O(1)
-  * statistics; the min scan over live pairs bounds the loop at
+  * builds the per-(feature, value, class) histogram in one scan of the
+  * source (two above its bounded collect) with the equal-frequency
+  * candidate cap, only a bounded histogram crosses to the driver, and
+  * the merge loop is driver prefix-sum arithmetic. A merge changes the
+  * pair χ² of at most its two surviving neighbours, so each step
+  * recomputes O(1) statistics; the min scan over live pairs bounds the loop at
   * O(candidates²) worst case — the bounded-candidates contract makes that
   * a driver-side constant, never a corpus cost. The fitted model IS a
   * [[CAIMDiscretizerModel]], so save/load and the narrow Bucketizer
@@ -52,21 +52,8 @@ class ChiMergeDiscretizer(override val uid: String)
 
   override def fit(ds: Dataset[_]): CAIMDiscretizerModel = {
     transformSchema(ds.schema)
-    val feats = $(inputCols)
-    val (labels, byFeat) =
-      SupervisedHistogram.collect(ds.toDF(), feats, $(labelCol), $(maxCandidates))
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val splits = Await.result(
-      Future.sequence(feats.indices.map { fi =>
-        Future {
-          val (values, counts) = byFeat.getOrElse(fi,
-            (Array.empty[Double], Array.empty[Array[Long]]))
-          ChiMergeDiscretizer.chiMergeSelect(values, counts, labels.length,
-            $(alpha))
-        }
-      }), Duration.Inf).toArray
+    val splits = SupervisedHistogram.splits(ds.toDF(), $(inputCols), $(labelCol),
+      $(maxCandidates))(ChiMergeDiscretizer.chiMergeSelect(_, _, _, $(alpha)))
     copyValues(new CAIMDiscretizerModel(uid, splits).setParent(this))
   }
 

@@ -16,9 +16,10 @@ import org.apache.spark.sql.types.StructType
   * which makes it the natural second algorithm on the §2.9 surface.
   *
   * Scale design is CAIM's, shared literally: [[SupervisedHistogram]]
-  * builds the one-pass distributed per-(feature, value, class) histogram
-  * with the equal-frequency candidate cap, only the compressed histogram
-  * crosses to the driver, and the recursive MDL search is a pure
+  * builds the per-(feature, value, class) histogram in one scan of the
+  * source (two above its bounded collect) with the equal-frequency
+  * candidate cap, only a bounded histogram crosses to the driver, and
+  * the recursive MDL search is a pure
   * driver-side computation over prefix sums — O(depth × candidates ×
   * classes) per feature, candidates ≤ maxCandidates. The fitted model IS
   * a [[CAIMDiscretizerModel]] (boundaries + narrow Bucketizer transform),
@@ -45,20 +46,8 @@ class MDLPDiscretizer(override val uid: String)
 
   override def fit(ds: Dataset[_]): CAIMDiscretizerModel = {
     transformSchema(ds.schema)
-    val feats = $(inputCols)
-    val (labels, byFeat) =
-      SupervisedHistogram.collect(ds.toDF(), feats, $(labelCol), $(maxCandidates))
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val splits = Await.result(
-      Future.sequence(feats.indices.map { fi =>
-        Future {
-          val (values, counts) = byFeat.getOrElse(fi,
-            (Array.empty[Double], Array.empty[Array[Long]]))
-          MDLPDiscretizer.mdlpSelect(values, counts, labels.length)
-        }
-      }), Duration.Inf).toArray
+    val splits = SupervisedHistogram.splits(ds.toDF(), $(inputCols), $(labelCol),
+      $(maxCandidates))(MDLPDiscretizer.mdlpSelect)
     copyValues(new CAIMDiscretizerModel(uid, splits).setParent(this))
   }
 

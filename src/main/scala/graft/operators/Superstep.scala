@@ -49,7 +49,7 @@ object Superstep {
     * order is the same under any partitioning. `limit` takes an Int: a
     * gate past Int.MaxValue collects at most Int.MaxValue rows, and a
     * frame that fills them takes the distributed branch. */
-  private[operators] def collectBelow[T: Ordering: ClassTag](df: DataFrame,
+  private[graft] def collectBelow[T: Ordering: ClassTag](df: DataFrame,
       gate: Long)(row: Row => T): Option[Array[T]] =
     if (gate <= 0L) None
     else {

@@ -1,9 +1,12 @@
 package graft.queries
 
+import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.feature.Bucketizer
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.T.{Q, t}
+import graft.ml.{CAIMDiscretizerModel, CAIMParams}
 
 /** SURVEY.md §2.9 — the reference's own surface: CAIM discretization
   * dataflow stages (Kurgan & Cios, IEEE TKDE 16(2), 2004), each exposed as a
@@ -15,6 +18,25 @@ object Caim {
 
   /** Literal splits for the transform demo (within the embedding[0] range). */
   private val demoSplits = Array(-0.2, 0.0, 0.2)
+
+  /** A supervised discretizer fitted on f1..f4 = embedding[1..4] against
+    * `label` (every estimator's default label column), as
+    * (feature, bin_idx, boundary) rows with boundaries rounded to 6 dp. */
+  private def boundaryRows(
+      est: Estimator[CAIMDiscretizerModel] with CAIMParams): Q = (s, sf) => {
+    import s.implicits._
+    val names = (1 to 4).map(i => s"f$i").toArray
+    val df = t(s, sf, "embeddings").select(
+      (1 to 4).map(i => element_at(col("embedding"), i).cast("double").as(s"f$i")) :+
+        col("label"): _*)
+    val model = est.fit(df,
+      ParamMap(est.inputCols -> names, est.outputCols -> names.map("b" + _)))
+    model.boundaries.zipWithIndex.flatMap { case (bs, fi) =>
+      bs.zipWithIndex.map { case (b, bi) => (names(fi), bi.toLong, b) }
+    }.toSeq.toDF("feature", "bin_idx", "boundary")
+      .withColumn("boundary", round(col("boundary"), 6))
+      .orderBy("feature", "bin_idx")
+  }
 
   val queries: Map[String, Q] = Map(
     // Alg. step 1: midpoints between consecutive distinct feature values.
@@ -92,110 +114,32 @@ object Caim {
         .orderBy("vec_id")
     }),
 
-    // the FULL greedy CAIM fit (Kurgan–Cios Alg. steps 2–4) as a DECLARED
-    // rows-only query (round 7): the reference's core algorithm finally
-    // reaches a CORRECTNESS row. Four features (embedding[1..4]) + label
-    // through [[graft.ml.CAIMDiscretizer]]; the fit is deterministic —
-    // exact integer histogram, exact greedy over prefix sums — so the
-    // emitted (feature, bin_idx, boundary) rows are stable run-to-run.
-    // Not SQL-expressible (iterative greedy) → no oracle entry; CaimSpec's
-    // golden/property/save-load suites pin the fit semantics.
-    "caim_fit" -> ((s, sf) => {
-      import s.implicits._
-      val names = (1 to 4).map(i => s"f$i")
-      val df = t(s, sf, "embeddings").select(
-        (1 to 4).map(i => element_at(col("embedding"), i).cast("double").as(s"f$i")) :+
-          col("label"): _*)
-      val model = new graft.ml.CAIMDiscretizer()
-        .setInputCols(names.toArray)
-        .setOutputCols(names.map("b" + _).toArray)
-        .setLabelCol("label")
-        .fit(df)
-      model.boundaries.zipWithIndex.flatMap { case (bs, fi) =>
-        bs.zipWithIndex.map { case (b, bi) => (names(fi), bi.toLong, b) }
-      }.toSeq.toDF("feature", "bin_idx", "boundary")
-        .withColumn("boundary", round(col("boundary"), 6))
-        .orderBy("feature", "bin_idx")
-    }),
-
-    // MDLP supervised discretization (round 11, rows-only like caim_fit:
-    // the recursive MDL search is not SQL-expressible; MdlpSpec pins
-    // golden boundaries, MDL-rejection, purity no-ops, and partitioning
-    // invariance). Fayyad–Irani 1993 — the CAIM paper's own benchmark
-    // comparison — over the SAME one-pass distributed histogram and the
-    // same Bucketizer-backed model as caim_fit.
-    // Ameva (round 11, rows-only — the greedy loop is not SQL-expressible;
-    // AmevaSpec pins boundary-exact equality vs an independent from-scratch
-    // chi-square greedy): the third classic supervised discretizer,
-    // completing the family the CAIM literature itself benchmarks — CAIM
-    // (max²/M criterion), MDLP (entropy/MDL), Ameva (χ²/k(ℓ−1)); same
-    // shared one-pass SupervisedHistogram boundary, same model class.
-    "disc_ameva" -> ((s, sf) => {
-      import s.implicits._
-      val names = (1 to 4).map(i => s"f$i")
-      val df = t(s, sf, "embeddings").select(
-        (1 to 4).map(i => element_at(col("embedding"), i).cast("double").as(s"f$i")) :+
-          col("label"): _*)
-      val model = new graft.ml.AmevaDiscretizer()
-        .setInputCols(names.toArray)
-        .setOutputCols(names.map("b" + _).toArray)
-        .setLabelCol("label")
-        .fit(df)
-      model.boundaries.zipWithIndex.flatMap { case (bs, fi) =>
-        bs.zipWithIndex.map { case (b, bi) => (names(fi), bi.toLong, b) }
-      }.toSeq.toDF("feature", "bin_idx", "boundary")
-        .withColumn("boundary", round(col("boundary"), 6))
-        .orderBy("feature", "bin_idx")
-    }),
-
-    // ChiMerge discretization (round 12, rows-only) — the BOTTOM-UP
-    // member completing the supervised family (CAIM/Ameva top-down
-    // greedy, MDLP recursive, ChiMerge merge-up): adjacent intervals
-    // merge while their 2×S contingency chi-square stays below the
-    // df = S−1 critical value at alpha = 0.05, so every surviving cut
-    // marks a class-distribution change the data supports. Same bounded
-    // contract as its three siblings: ONE distributed histogram pass
-    // ([[graft.ml.SupervisedHistogram]]), compressed cells to the
-    // driver, deterministic (leftmost-tie) driver merge loop, model and
-    // transform shared with CAIM. No SQL oracle (the merge loop is not
-    // SQL-expressible — the disc_ameva precedent); ChiMergeSpec pins
-    // exact equality against an independent reference merge plus the
-    // significance stop law.
-    "disc_chimerge" -> ((s, sf) => {
-      import s.implicits._
-      val names = (1 to 4).map(i => s"f$i")
-      val df = t(s, sf, "embeddings").select(
-        (1 to 4).map(i => element_at(col("embedding"), i).cast("double").as(s"f$i")) :+
-          col("label"): _*)
-      val model = new graft.ml.ChiMergeDiscretizer()
-        .setInputCols(names.toArray)
-        .setOutputCols(names.map("b" + _).toArray)
-        .setLabelCol("label")
-        .fit(df)
-      model.boundaries.zipWithIndex.flatMap { case (bs, fi) =>
-        bs.zipWithIndex.map { case (b, bi) => (names(fi), bi.toLong, b) }
-      }.toSeq.toDF("feature", "bin_idx", "boundary")
-        .withColumn("boundary", round(col("boundary"), 6))
-        .orderBy("feature", "bin_idx")
-    }),
-
-    "disc_mdlp" -> ((s, sf) => {
-      import s.implicits._
-      val names = (1 to 4).map(i => s"f$i")
-      val df = t(s, sf, "embeddings").select(
-        (1 to 4).map(i => element_at(col("embedding"), i).cast("double").as(s"f$i")) :+
-          col("label"): _*)
-      val model = new graft.ml.MDLPDiscretizer()
-        .setInputCols(names.toArray)
-        .setOutputCols(names.map("b" + _).toArray)
-        .setLabelCol("label")
-        .fit(df)
-      model.boundaries.zipWithIndex.flatMap { case (bs, fi) =>
-        bs.zipWithIndex.map { case (b, bi) => (names(fi), bi.toLong, b) }
-      }.toSeq.toDF("feature", "bin_idx", "boundary")
-        .withColumn("boundary", round(col("boundary"), 6))
-        .orderBy("feature", "bin_idx")
-    }),
+    // The four supervised fits as DECLARED rows-only queries: four
+    // features (embedding[1..4]) + label through each MLlib estimator,
+    // emitted as (feature, bin_idx, boundary) rows. Every fit is
+    // deterministic — exact integer histogram, exact driver search over
+    // prefix sums — so the rows are stable run-to-run. None of the
+    // searches is SQL-expressible, so none has an oracle entry; the specs
+    // pin the fit semantics instead:
+    //  - caim_fit: the full greedy CAIM fit (Kurgan–Cios Alg. steps 2–4,
+    //    round 7); CaimSpec's golden/property/save-load suites.
+    //  - disc_ameva: Ameva (round 11), χ²/k(ℓ−1) over the same greedy
+    //    loop; AmevaSpec's exact equality vs an independent from-scratch
+    //    chi-square greedy.
+    //  - disc_chimerge: ChiMerge (round 12), the BOTTOM-UP member —
+    //    adjacent intervals merge while their 2×S chi-square stays below
+    //    the df = S−1 critical value at alpha = 0.05; ChiMergeSpec's
+    //    independent reference merge plus the significance stop law.
+    //  - disc_mdlp: MDLP (round 11), Fayyad–Irani 1993, the CAIM paper's
+    //    own benchmark comparison; MdlpSpec's golden boundaries,
+    //    MDL-rejection, purity no-ops and partitioning invariance.
+    // All four share [[graft.ml.SupervisedHistogram]] (one source scan
+    // when the histogram fits its bounded collect) and the
+    // Bucketizer-backed model class.
+    "caim_fit" -> boundaryRows(new graft.ml.CAIMDiscretizer()),
+    "disc_ameva" -> boundaryRows(new graft.ml.AmevaDiscretizer()),
+    "disc_chimerge" -> boundaryRows(new graft.ml.ChiMergeDiscretizer()),
+    "disc_mdlp" -> boundaryRows(new graft.ml.MDLPDiscretizer()),
 
     // unsupervised equal-width baseline
     "disc_equal_width" -> ((s, sf) => {

@@ -123,6 +123,58 @@ class CaimSpec extends AnyFunSuite with SparkFixture with Matchers {
     boundsOf(e.orderBy(rand(seed = 5))) shouldBe base
   }
 
+  /** The two compressions of one histogram, each as sorted cells with
+    * values compared by their bits (canonical NaN), so NaN cells compare
+    * equal. */
+  private def bothGrids(df: org.apache.spark.sql.DataFrame, feats: Array[String],
+      label: String, cap: Int) = {
+    import graft.ml.SupervisedHistogram
+    val hist = SupervisedHistogram.histogram(df, feats, label)
+    def norm(cells: Array[SupervisedHistogram.Cell]) = cells.map {
+      case (f, v, y, c) => (f, java.lang.Double.doubleToLongBits(v), y, c)
+    }.sortBy(c => (c._1, c._2, c._3))
+    val cells = hist.collect().map(SupervisedHistogram.cell)
+    (norm(SupervisedHistogram.driverGrid(cells, cap)),
+      norm(SupervisedHistogram.distributedGrid(hist, cap)))
+  }
+
+  test("driver grid == distributed grid on the embeddings column") {
+    val e = T.t(spark, sf001, "embeddings")
+      .select(element_at(col("embedding"), 1).cast("double").as("e0"), col("label"))
+    for (cap <- Seq(16, 32)) {
+      val (driver, distributed) = bothGrids(e, Array("e0"), "label", cap)
+      withClue(s"cap $cap: ") {
+        driver.map(_._2).distinct.length shouldBe cap
+        driver shouldBe distributed
+      }
+    }
+  }
+
+  test("driver grid == distributed grid with ties, NaN, ±Inf, nulls and a " +
+      "constant feature next to a capped one") {
+    import spark.implicits._
+    val inf = Double.PositiveInfinity
+    // a: 13 distinct values (NaN, ±Inf, -0.0 tied with 0.0, a null row)
+    // — capped at every cap below; b: constant; c: three values — capped
+    // only at 2
+    val a = Seq[java.lang.Double](Double.NaN, -inf, inf, -0.0, 0.0, 1.0, 1.0,
+      2.0, 3.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, Double.NaN, inf, null, 9.0)
+    val rows = a.zipWithIndex.map { case (v, i) =>
+      (v, 5.0, (i % 3).toDouble, if (i % 4 == 0) "p" else "q") }
+    val df = rows.toDF("a", "b", "c", "y")
+    for (cap <- Seq(2, 3, 4, 5)) {
+      val (driver, distributed) = bothGrids(df, Array("a", "b", "c"), "y", cap)
+      withClue(s"cap $cap: ") {
+        driver shouldBe distributed
+        // the capped feature keeps exactly `cap` values, NaN as its largest
+        driver.filter(_._1 == 0).map(_._2).distinct.length shouldBe cap
+        driver.filter(_._1 == 0).map(_._2) should contain(
+          java.lang.Double.doubleToLongBits(Double.NaN))
+        driver.filter(_._1 == 1).map(_._4).sum shouldBe rows.length
+      }
+    }
+  }
+
   test("knn classify: deterministic majority vote for every vector") {
     val emb = T.t(spark, sf001, "embeddings")
     val out = graft.ml.Knn.classify(emb, k = 5)

@@ -226,6 +226,100 @@ class LeakSpec extends AnyFunSuite with SparkFixture with Matchers {
     violations shouldBe empty
   }
 
+  test("a discretizer fit scans its source once below the histogram's " +
+      "bounded collect, at most twice above it, and pins no block") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.ml.Estimator
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerStageCompleted}
+    import graft.ml.{AmevaDiscretizer, CAIMDiscretizer, CAIMDiscretizerModel,
+      ChiMergeDiscretizer, MDLPDiscretizer, SupervisedHistogram}
+    // a parquet source: a stage scans it iff its RDD lineage holds a
+    // FileScanRDD. e0..e3 have 500 distinct values each; k1..k3 are
+    // rounded to a few values, so a histogram over (e0, k1, k2, k3) fits
+    // the collect of a fit capped below e0's distinct count
+    val src = T.t(spark, sf001, "embeddings").select(
+      (0 until 4).map(i =>
+        element_at(col("embedding"), i + 1).cast("double").as(s"e$i")) ++
+        (1 until 4).map(i =>
+          round(element_at(col("embedding"), i + 1), 1).cast("double").as(s"k$i")) :+
+        col("label"): _*)
+    val wide = Array("e0", "e1", "e2", "e3")
+    val mixed = Array("e0", "k1", "k2", "k3")
+    val mixedRows = SupervisedHistogram.histogram(src, mixed, "label").count()
+    val e0Distinct = src.select("e0").distinct().count()
+    val underCap = (mixedRows / mixed.length + 1).toInt
+    withClue(s"$mixedRows histogram rows, e0 has $e0Distinct values: ") {
+      e0Distinct should be > underCap.toLong
+      mixedRows should be <= mixed.length.toLong * underCap
+    }
+
+    // (job description, SQL execution) pairs whose stages scanned the
+    // source; a marker job's end means every earlier event has been
+    // counted (events arrive in order)
+    type Exec = (String, String)
+    val execOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Exec]()
+    val descOfJob = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val scans = java.util.concurrent.ConcurrentHashMap.newKeySet[Exec]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties);
+             d <- Option(p.getProperty("spark.job.description"))) {
+          descOfJob.put(e.jobId, d)
+          Option(p.getProperty("spark.sql.execution.id")).foreach(x =>
+            e.stageIds.foreach(id => execOfStage.put(id, (d, x))))
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(descOfJob.get(e.jobId)).foreach(ended.add)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          Option(execOfStage.get(e.stageInfo.stageId)).foreach(scans.add)
+    }
+    val sc = spark.sparkContext
+    def scansOf(desc: String)(body: => Unit): Int = {
+      sc.setJobDescription(desc)
+      try body finally sc.setJobDescription(null)
+      val marker = s"$desc-marker"
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!ended.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      ended.contains(marker) shouldBe true
+      scans.asScala.count(_._1 == desc)
+    }
+
+    val fits: Seq[(String, () => Estimator[CAIMDiscretizerModel])] = Seq(
+      "CAIM" -> (() => new CAIMDiscretizer()),
+      "MDLP" -> (() => new MDLPDiscretizer()),
+      "Ameva" -> (() => new AmevaDiscretizer()),
+      "ChiMerge" -> (() => new ChiMergeDiscretizer()))
+    // (case, features, maxCandidates or None for the default, scans allowed)
+    val cases = Seq(("uncapped", wide, None, 1 to 1),
+      ("capped below the limit", mixed, Some(underCap), 1 to 1),
+      ("over the limit", Array("e0"), Some(16), 1 to 2))
+    val violations = scala.collection.mutable.ArrayBuffer.empty[String]
+    sc.addSparkListener(listener)
+    try {
+      for ((name, mk) <- fits; (what, feats, cap, allowed) <- cases) {
+        val est = mk()
+        est.set(est.getParam("inputCols"), feats)
+        est.set(est.getParam("outputCols"), feats.map(_ + "_b"))
+        cap.foreach(c => est.set(est.getParam("maxCandidates"), c))
+        val before = storedIds
+        val n = scansOf(s"$name $what") {
+          est.fit(src).boundaries.length shouldBe feats.length
+        }
+        if (!allowed.contains(n))
+          violations += s"$name $what fit scanned its source $n times"
+        val left = storedIds.diff(before)
+        if (left.nonEmpty) violations += s"$name $what fit left ${left.size} blocks"
+      }
+    } finally sc.removeSparkListener(listener)
+    violations shouldBe empty
+  }
+
   test("only Tracked persists an RDD under src/main") {
     // superstep snapshots go through Tracked.snap, which frees them
     val files = SourceScan.scalaFiles("src/main")

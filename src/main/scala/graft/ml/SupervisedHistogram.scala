@@ -55,10 +55,13 @@ private[graft] object SupervisedHistogram {
       .where(col("v").isNotNull)
       .groupBy("fidx", "v", "y").agg(count(lit(1)).as("cnt"))
 
-  /** One fit body for every supervised discretizer: the histogram of
-    * `feats`, then `select(values, counts, nClasses)` per feature, in
-    * order. The per-feature searches are independent, so they fan out
-    * across driver cores, each over its own slice of the histogram. */
+  /** The fit body of every supervised discretizer
+    * ([[SupervisedDiscretizer.fit]]): the histogram of `feats`, then
+    * `select(values, counts, nClasses)` per feature, in order. A NaN
+    * feature value fails the fit with an IllegalArgumentException naming
+    * its column; null values are dropped. The per-feature searches are
+    * independent, so they fan out across driver cores, each over its own
+    * slice of the histogram. */
   def splits(df: DataFrame, feats: Array[String], labelCol: String,
       maxCandidates: Int)(select: (Array[Double], Array[Array[Long]], Int) =>
       Array[Double]): Array[Array[Double]] = {
@@ -89,6 +92,10 @@ private[graft] object SupervisedHistogram {
     val labels = cells.map(_._3).distinct.sorted
     val labelIdx = labels.zipWithIndex.toMap
     val byFeat = cells.groupBy(_._1).map { case (fi, mine) =>
+      // NaN is rejected as the Bucketizer of transform rejects it; a
+      // capped feature's NaN is its last bucket's representative
+      require(!mine.exists(_._2.isNaN),
+        s"feature column ${feats(fi)} holds NaN; drop or impute it before fitting")
       val values = mine.map(_._2).distinct.sorted
       val vIdx = values.zipWithIndex.toMap
       val counts = Array.ofDim[Long](values.length, labels.length)

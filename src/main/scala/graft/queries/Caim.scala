@@ -1,12 +1,12 @@
 package graft.queries
 
-import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.feature.Bucketizer
 import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.T.{Q, t}
-import graft.ml.{CAIMDiscretizerModel, CAIMParams}
+import graft.ml.SupervisedDiscretizer
 
 /** SURVEY.md §2.9 — the reference's own surface: CAIM discretization
   * dataflow stages (Kurgan & Cios, IEEE TKDE 16(2), 2004), each exposed as a
@@ -22,8 +22,7 @@ object Caim {
   /** A supervised discretizer fitted on f1..f4 = embedding[1..4] against
     * `label` (every estimator's default label column), as
     * (feature, bin_idx, boundary) rows with boundaries rounded to 6 dp. */
-  private def boundaryRows(
-      est: Estimator[CAIMDiscretizerModel] with CAIMParams): Q = (s, sf) => {
+  private def boundaryRows(est: SupervisedDiscretizer): Q = (s, sf) => {
     import s.implicits._
     val names = (1 to 4).map(i => s"f$i").toArray
     val df = t(s, sf, "embeddings").select(
@@ -73,34 +72,14 @@ object Caim {
     }),
 
     // Quanta matrix over a fixed 20-bin grid: counts per (label, interval)
-    "caim_quanta" -> ((s, sf) => {
-      val e = t(s, sf, "embeddings")
-        .select(col("label"), element_at(col("embedding"), 1).cast("double").as("v"))
-      val stats = e.agg(min("v").as("lo"), max("v").as("hi"))
-      e.crossJoin(broadcast(stats))
-        .select(col("label"),
-          least(floor((col("v") - col("lo")) / ((col("hi") - col("lo")) / 20)), lit(19L))
-            .cast("long").as("bin"))
-        .groupBy("label", "bin").agg(count(lit(1)).as("cnt"))
-        .orderBy("label", "bin")
-    }),
+    "caim_quanta" -> ((s, sf) => quanta(s, sf).orderBy("label", "bin")),
 
     // CAIM criterion of that fixed scheme: (Σ_r max_r²/M_r) / n
-    "caim_criterion" -> ((s, sf) => {
-      val e = t(s, sf, "embeddings")
-        .select(col("label"), element_at(col("embedding"), 1).cast("double").as("v"))
-      val stats = e.agg(min("v").as("lo"), max("v").as("hi"))
-      val quanta = e.crossJoin(broadcast(stats))
-        .select(col("label"),
-          least(floor((col("v") - col("lo")) / ((col("hi") - col("lo")) / 20)), lit(19L))
-            .cast("long").as("bin"))
-        .groupBy("label", "bin").agg(count(lit(1)).as("cnt"))
-      quanta.groupBy("bin")
-        .agg(max("cnt").as("mx"), sum("cnt").as("tot"))
-        .agg(count(lit(1)).as("n_bins"),
-          round(sum(col("mx") * col("mx") / col("tot").cast("double")) / count(lit(1)), 6)
-            .as("caim"))
-    }),
+    "caim_criterion" -> ((s, sf) => quanta(s, sf).groupBy("bin")
+      .agg(max("cnt").as("mx"), sum("cnt").as("tot"))
+      .agg(count(lit(1)).as("n_bins"),
+        round(sum(col("mx") * col("mx") / col("tot").cast("double")) / count(lit(1)), 6)
+          .as("caim"))),
 
     // Model.transform with literal splits (Bucketizer bin assignment —
     // narrow, no shuffle: exactly how the fitted model scales)
@@ -147,9 +126,7 @@ object Caim {
         .select(col("vec_id"), element_at(col("embedding"), 1).cast("double").as("v"))
       val stats = e.agg(min("v").as("lo"), max("v").as("hi"))
       e.crossJoin(broadcast(stats))
-        .select(col("vec_id"),
-          least(floor((col("v") - col("lo")) / ((col("hi") - col("lo")) / 10)), lit(9L))
-            .cast("long").as("bin"))
+        .select(col("vec_id"), widthBin(col("v"), col("lo"), col("hi"), 10).as("bin"))
         .orderBy("vec_id")
     }),
 
@@ -305,17 +282,34 @@ object Caim {
         org.apache.spark.sql.types.DoubleType))))
   }
 
+  /** Equal-width bin of `v` among `n` bins over [lo, hi], the maximum in
+    * the last bin: the grid of caim_quanta, disc_equal_width and the naive
+    * Bayes pair. */
+  private def widthBin(v: Column, lo: Column, hi: Column, n: Int): Column =
+    least(floor((v - lo) / ((hi - lo) / n)), lit(n - 1L)).cast("long")
+
+  /** caim_quanta's (label, bin, cnt) rows, unordered: embedding[1] over
+    * the 20-bin equal-width grid. */
+  private def quanta(s: SparkSession, sf: String): DataFrame = {
+    val e = t(s, sf, "embeddings")
+      .select(col("label"), element_at(col("embedding"), 1).cast("double").as("v"))
+    val stats = e.agg(min("v").as("lo"), max("v").as("hi"))
+    e.crossJoin(broadcast(stats))
+      .select(col("label"), widthBin(col("v"), col("lo"), col("hi"), 20).as("bin"))
+      .groupBy("label", "bin").agg(count(lit(1)).as("cnt"))
+  }
+
   /** Feature names for the naive Bayes pair (embedding[1..3]). */
   private val nbFeats = Seq("f1", "f2", "f3")
 
-  private def nbFeatsToDF(s: org.apache.spark.sql.SparkSession) = {
+  private def nbFeatsToDF(s: SparkSession) = {
     import s.implicits._
     nbFeats.toDF("feature")
   }
 
   /** Shared NB long form: (vec_id, label, feature, bin) — caim_quanta's
     * 20-bin equal-width grid per feature, one corpus scan, one explode. */
-  private def nbLongForm(s: org.apache.spark.sql.SparkSession, sf: String) = {
+  private def nbLongForm(s: SparkSession, sf: String) = {
     val e = t(s, sf, "embeddings").select(
       col("vec_id") +: col("label") +:
         nbFeats.zipWithIndex.map { case (n, i) =>
@@ -326,8 +320,7 @@ object Caim {
         Seq(min(col(n)).as(s"lo_$n"), max(col(n)).as(s"hi_$n"))) :+
         max(col(nbFeats.head)).as(s"hi_${nbFeats.head}"): _*)
     val binExprs = nbFeats.flatMap { n =>
-      Seq(lit(n), least(floor((col(n) - col(s"lo_$n")) /
-        ((col(s"hi_$n") - col(s"lo_$n")) / 20)), lit(19L)).cast("long"))
+      Seq(lit(n), widthBin(col(n), col(s"lo_$n"), col(s"hi_$n"), 20))
     }
     e.crossJoin(broadcast(stats))
       .select(col("vec_id"), col("label"),

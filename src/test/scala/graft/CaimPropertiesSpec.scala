@@ -4,11 +4,12 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import graft.ml.CAIMDiscretizer
+import graft.ml.{AmevaDiscretizer, CAIMDiscretizer, ChiMergeDiscretizer, MDLPDiscretizer}
 
 /** ScalaCheck properties for the CAIM greedy core (SURVEY.md §5.3):
   * exercised directly on `greedySelect` (the driver-side algorithm) so
-  * hundreds of cases run without Spark jobs, plus one generated end-to-end
+  * hundreds of cases run without Spark jobs — the boundary contract also
+  * on the Ameva, MDLP and ChiMerge searches — plus one generated end-to-end
   * Spark fit. FIXTURES.md §F2 property: class-clustered gaussians must
   * recover boundaries between adjacent class means. Generators are sampled
   * with fixed seeds so failures reproduce.
@@ -36,9 +37,24 @@ class CaimPropertiesSpec extends AnyFunSuite with SparkFixture with Matchers {
       .suchThat(_.forall(_.sum > 0))
   } yield (values, counts, s)
 
-  test("boundaries are strictly increasing and span [min, max]") {
+  private type Select = (Array[Double], Array[Array[Long]], Int) => Array[Double]
+
+  /** Every search of the family, by name. */
+  private val selects: Seq[(String, Select)] =
+    Seq("caim" -> CAIMDiscretizer.greedySelect, "ameva" -> AmevaDiscretizer.amevaSelect,
+      "mdlp" -> MDLPDiscretizer.mdlpSelect,
+      "chimerge" -> (ChiMergeDiscretizer.chiMergeSelect(_, _, _, 0.05)))
+
+  /** `body` over every search of the family, for each generated histogram. */
+  private def forAllSelects(
+      body: (Array[Double], Array[Array[Long]], Int, Select) => Unit): Unit =
     forAll(histGen) { case (values, counts, s) =>
-      val b = CAIMDiscretizer.greedySelect(values, counts, s)
+      selects.foreach { case (name, select) => withClue(name)(body(values, counts, s, select)) }
+    }
+
+  test("boundaries are strictly increasing and span [min, max]") {
+    forAllSelects { (values, counts, s, select) =>
+      val b = select(values, counts, s)
       b.head shouldBe values.head
       b.last shouldBe values.last
       b.sliding(2).foreach { case Array(x, y) => x should be < y; case _ => }
@@ -51,12 +67,21 @@ class CaimPropertiesSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("every cut lies between two adjacent observed values") {
-    forAll(histGen) { case (values, counts, s) =>
-      val cuts = CAIMDiscretizer.greedySelect(values, counts, s).drop(1).dropRight(1)
+    forAllSelects { (values, counts, s, select) =>
+      val cuts = select(values, counts, s).drop(1).dropRight(1)
       cuts.foreach { c =>
         val i = values.indexWhere(_ > c)
         i should be > 0
         c shouldBe (values(i - 1) + values(i)) / 2
+      }
+    }
+  }
+
+  test("degenerate histograms keep two boundaries: m = 0 and m = 1") {
+    selects.foreach { case (name, select) =>
+      withClue(name) {
+        select(Array.empty, Array.empty, 0) shouldBe Array(0.0, 0.0)
+        select(Array(3.5), Array(Array(4L, 1L)), 2) shouldBe Array(3.5, 3.5)
       }
     }
   }

@@ -243,7 +243,11 @@ object FileBloom {
       if (forceScan) cols.foreach(c => ambiguous += ((p.getName, c)))
       else {
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+          // the session's conf: parquet's default options build a fresh
+          // Configuration, which re-parses the default resources per file.
+          // Built per open, as closing a reader releases its codec factory.
+          org.apache.parquet.HadoopReadOptions.builder(conf).build())
         try {
           val footer = reader.getFooter
           fileDictionaryBits(footer, reader, cols, fields, mBits, k).foreach {

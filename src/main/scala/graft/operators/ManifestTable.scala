@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Minimal manifest-swap commit protocol over plain parquet — the atomic
   * layer Upsert/Compact/partition-overwrite were missing (round-10 verdict
@@ -278,17 +283,73 @@ object ManifestTable {
         .getOrElse(spark.emptyDataFrame)
     else
       applyDeletes(spark, dir, s.deletes,
-        dataReader(spark, s.header).parquet(files.map(resolve(dir, _)): _*))
+        dataScan(spark, s.header, files.map(f => new Path(resolve(dir, f)))))
 
-  /** Parquet reader for this table's data files: under a pinned schema
-    * header, columns resolve BY NAME against each file's footer with
-    * missing columns null-backfilled (`spark.read.schema` semantics — the
-    * streaming converter's contract applied to batch reads, so files
-    * written before an `evolveSchema` commit surface the new columns as
-    * NULL); headerless legacy tables keep footer inference. */
-  private def dataReader(spark: SparkSession, header: Option[StructType])
-      : org.apache.spark.sql.DataFrameReader =
-    header.map(spark.read.schema).getOrElse(spark.read)
+  /** A scan's fixed file list, fed by a snapshot instead of a directory
+    * listing. Equal by its sorted file paths, as `InMemoryFileIndex` is by
+    * its root paths, so two frames over the same files compare equal —
+    * cache lookups and exchange reuse depend on that. Files keep the order
+    * they were given in, and empty files are skipped, as that index does. */
+  private final class SnapshotIndex(statuses: Seq[FileStatus]) extends FileIndex {
+    private val key = statuses.map(_.getPath.toString).sorted
+    override def rootPaths: Seq[Path] = statuses.map(_.getPath)
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty,
+        statuses.filter(_.getLen > 0).map(FileStatusWithMetadata(_))))
+    override def inputFiles: Array[String] = statuses.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = statuses.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+    override def equals(o: Any): Boolean = o match {
+      case i: SnapshotIndex => i.key == key
+      case _ => false
+    }
+    override def hashCode: Int = key.hashCode
+  }
+
+  /** The one factory for this layer's parquet reads: `statuses` under
+    * `schema`, built straight from the snapshot. `spark.read.parquet` pays
+    * a data-source lookup, a path glob and listing and, without a schema,
+    * an inference job per call; this pays none of them. Columns resolve
+    * BY NAME against each file's footer and missing ones read as null
+    * (`spark.read.schema` semantics — files written before an
+    * `evolveSchema` commit surface the new columns as NULL), and
+    * `_metadata.file_path`/`row_index` carry the values a path-based read
+    * gives, which delete sidecars already on disk are keyed by. */
+  private def parquetScan(spark: SparkSession, schema: StructType,
+      statuses: Seq[FileStatus]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(new SnapshotIndex(statuses),
+      new StructType(), schema, None, new ParquetFileFormat, Map.empty)(spark))
+
+  /** The data files at `paths` under the pinned `header`, one status call
+    * per file; headerless legacy tables keep `spark.read.parquet` footer
+    * inference. */
+  private def dataScan(spark: SparkSession, header: Option[StructType],
+      paths: Seq[Path]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    header match {
+      case Some(h) =>
+        parquetScan(spark, h, paths.map(p => p.getFileSystem(conf).getFileStatus(p)))
+      case None => spark.read.parquet(paths.map(_.toString): _*)
+    }
+  }
+
+  /** The schema [[writeDeletes]] gives every delete sidecar. */
+  private val DeleteSchema = StructType(Seq(
+    StructField("file", StringType), StructField("pos", LongType)))
+
+  /** The part files of the delete sidecars `dels`, one listing per
+    * sidecar directory. */
+  private def sidecarFiles(spark: SparkSession, dir: String,
+      dels: Seq[String]): Seq[FileStatus] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dels.flatMap { d =>
+      val p = new Path(resolve(dir, d))
+      p.getFileSystem(conf).listStatus(p).toSeq
+        .filter(_.getPath.getName.endsWith(".parquet"))
+    }
+  }
 
   /** Row-position columns [[withPositions]] adds to a scan. */
   private val PosFile = "__graft_del_f"
@@ -308,7 +369,7 @@ object ManifestTable {
       .withColumn(PosFile, col("_metadata.file_path"))
       .withColumn(PosRow, col("_metadata.row_index"))
     if (dels.isEmpty) meta
-    else meta.join(spark.read.parquet(dels.map(resolve(dir, _)): _*)
+    else meta.join(parquetScan(spark, DeleteSchema, sidecarFiles(spark, dir, dels))
         .select(col("file").as(PosFile), col("pos").as(PosRow)),
       Seq(PosFile, PosRow), "left_anti")
   }
@@ -331,11 +392,26 @@ object ManifestTable {
     import org.apache.spark.sql.functions.{col, count, lit}
     val rel = s"_deletes/${java.util.UUID.randomUUID()}.parquet"
     val obs = new org.apache.spark.sql.Observation()
-    rows.select(col(PosFile).as("file"), col(PosRow).as("pos"))
+    oneSplit(rows.select(col(PosFile).as("file"), col(PosRow).as("pos")))
       .observe(obs, count(lit(1)).as("n"))
       .write.parquet(s"$dir/$rel")
     if (obs.get("n").asInstanceOf[Long] > 0L) Some(rel)
     else { fs.delete(new Path(s"$dir/$rel"), true); None }
+  }
+
+  /** `df` in one partition when it and the sum of its leaf relations
+    * both fit one read split (`spark.sql.files.maxPartitionBytes`) by the
+    * optimizer's estimates, else `df` unchanged. A merge-on-read write
+    * then lands one file instead of one per input partition, each of which
+    * every later read opens; the parallelism given up is bounded by one
+    * split of input, Spark's own task unit. A leaf without an estimate
+    * (a `LogicalRDD`) reports the default size and keeps its layout. */
+  private def oneSplit(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.optimizedPlan
+    val split = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    if (plan.stats.sizeInBytes <= split &&
+        plan.collectLeaves().map(_.stats.sizeInBytes).sum <= split) df.coalesce(1)
+    else df
   }
 
   /** The DELETE publish: the positions of `rows` land as one sidecar
@@ -377,7 +453,8 @@ object ManifestTable {
     // live rows only: already-deleted positions must not bloat the new
     // sidecar (idempotent re-delete writes nothing)
     val live = withPositions(spark, dir,
-      spark.read.parquet(base.files.map(resolve(dir, _)): _*), base.deletes)
+      dataScan(spark, base.header, base.files.map(f => new Path(resolve(dir, f)))),
+      base.deletes)
     publishDelete(spark, fs, dir, cas, base.version, live.where(pred))
   }
 
@@ -591,8 +668,8 @@ object ManifestTable {
         "upsertMor delta", dir))
     if (base.files.isEmpty) (base, None)
     else {
-      val raw = dataReader(spark, base.header)
-        .parquet(base.files.map(resolve(dir, _)): _*)
+      val raw = dataScan(spark, base.header,
+        base.files.map(f => new Path(resolve(dir, f))))
       if (base.header.isEmpty) {
         require(updates.columns.sorted.sameElements(raw.columns.sorted),
           s"upsertMor delta columns ${updates.columns.sorted.mkString(",")} " +
@@ -628,8 +705,8 @@ object ManifestTable {
         "left_semi")))
     val batch = java.util.UUID.randomUUID().toString
     val dataRel = s"data/$batch"
-    val newFiles = writeBatch(spark, fs, dir, dataRel, updates, statsCols,
-      bloomCols, bloomBits)
+    val newFiles = writeBatch(spark, fs, dir, dataRel, oneSplit(updates),
+      statsCols, bloomCols, bloomBits)
     transact(spark, dir, cas, Exact(base), batch, dataRel +: del.toSeq)(
       _.lines ++ del.map(DeletePrefix + _) ++ newFiles)
   }
@@ -897,8 +974,8 @@ object ManifestTable {
       if (insFiles.isEmpty) Nil
       else {
         val entries = insFiles.map { case (f, v) => (qualified(f), v) }
-        Seq(attributed(dataReader(spark, feedHeader)
-            .parquet(insFiles.map(t => resolve(dir, t._1)): _*), entries)
+        Seq(attributed(dataScan(spark, feedHeader,
+            insFiles.map(t => new Path(resolve(dir, t._1)))), entries)
           .withColumn("_change_type", lit("insert"))
           .withColumn("_commit_version", col("__graft_cdf_v"))
           .drop("__graft_cdf_v"))
@@ -909,23 +986,26 @@ object ManifestTable {
       else {
         // per-PART attribution keys: each sidecar dir's part files listed
         // once — O(sidecar part files) driver metadata, the manifest
-        // discipline — so the scan keys on _metadata.file_path directly
-        val delEntries = delSidecars.flatMap { case (d, v) =>
-          fs.listStatus(new Path(resolve(dir, d))).toSeq
-            .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-            .map(p => (p.toString, v))
-        }
-        val pos = attributed(spark.read
-          .parquet(delSidecars.map(t => resolve(dir, t._1)): _*), delEntries)
+        // discipline — and the same listing feeds the scan, which keys on
+        // _metadata.file_path directly
+        val delParts = delSidecars.map { case (d, v) =>
+          (sidecarFiles(spark, dir, Seq(d)), v) }
+        val delEntries = delParts.flatMap { case (ps, v) =>
+          ps.map(p => (p.getPath.toString, v)) }
+        val sidecars = parquetScan(spark, DeleteSchema, delParts.flatMap(_._1))
+        val pos = attributed(sidecars, delEntries)
         // the referenced physical files — sidecars record the absolute
         // _metadata.file_path at delete time; the distinct list is
         // O(files) driver metadata (the manifest discipline), the rows
-        // never leave the executors
-        val refFiles = pos.select("file").distinct()
-          .collect().map(_.getString(0)).sorted
+        // never leave the executors. This collect is the one job building
+        // the feed runs, as the scan below must name its files up front;
+        // each split de-duplicates its own names and the driver merges the
+        // sets, so it needs no shuffle stage
+        val refFiles = sidecars.select("file").as[String].rdd
+          .aggregate(Set.empty[String])(_ + _, _ ++ _).toSeq.sorted
         if (refFiles.isEmpty) Nil
-        else Seq(dataReader(spark, feedHeader)
-          .parquet(refFiles.toIndexedSeq: _*)
+        else Seq(dataScan(spark, feedHeader,
+            refFiles.map(f => new Path(new java.net.URI(f))))
           .withColumn("__graft_cdf_f", col("_metadata.file_path"))
           .withColumn("__graft_cdf_p", col("_metadata.row_index"))
           .join(pos.select(col("file").as("__graft_cdf_f"),
@@ -1098,7 +1178,11 @@ object ManifestTable {
     val out = Map.newBuilder[(String, String), Option[String]]
     files.foreach { p =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+        // the session's conf: parquet's default options build a fresh
+        // Configuration, which re-parses the default resources per file.
+        // Built per open, as closing a reader releases its codec factory.
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
       val footer = try reader.getFooter finally reader.close()
       val blocks = footer.getBlocks
       var rows = 0L

@@ -93,6 +93,12 @@ object T {
     * in [[graft.functions.D2U]] (round + verifying round-trip; falls back
     * to the definitional string-repr conversion whenever the proof
     * obligation fails). r18 optimization — see OPTIMIZATION_r18.md.
+    *
+    * Dirty input fails loudly: a DOUBLE input that is NaN, ±Infinity, or
+    * whose unscaled value (x · 10^scale, rounded) lies outside Long range
+    * throws an `ArithmeticException` naming `graft_dsum` (the job fails;
+    * nothing is silently dropped or reset). Filter such rows first.
+    * Nulls are skipped, and a group of only nulls sums to NULL.
     */
   def dsum(c: Column, scale: Int): Column =
     call_function("graft_dsum", c, lit(scale))
@@ -111,7 +117,9 @@ object T {
     * `sum(CAST(x AS DECIMAL(18,sx)) * CAST(y AS DECIMAL(18,sy)))
     * .cast("double")` — the Σx²/Σxy sums of the agg_ols / agg_corr /
     * agg_anova family — executed as one 128-bit integer multiply-
-    * accumulate per row ([[graft.functions.SumUnscaledProduct]]). */
+    * accumulate per row ([[graft.functions.SumUnscaledProduct]]). Dirty
+    * input fails as in [[dsum]], per factor; a row with a null on either
+    * side is skipped. */
   def dxsum(x: Column, y: Column, sx: Int, sy: Int): Column =
     call_function("graft_dxsum", x, y, lit(sx), lit(sy))
 

@@ -242,9 +242,10 @@ object D2U {
       if (2L * (d % pw) >= pw) q += 1
       return if (neg) -q else q
     }
-    java.math.BigDecimal.valueOf(x)
-      .setScale(s, java.math.RoundingMode.HALF_UP)
+    try java.math.BigDecimal.valueOf(x).setScale(s, java.math.RoundingMode.HALF_UP)
       .unscaledValue().longValueExact()
+    catch { case _: ArithmeticException => throw new ArithmeticException(
+      s"graft_dsum: input $x at scale $s is outside Long range once unscaled") }
   }
 }
 

@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity-search library surface: exact cosine pairs, brute-force top-k,
@@ -160,10 +159,10 @@ object Sim {
     * skew-bounded by bucket size.
     *
     * `maxBucket` (round 7) drops (band, value) buckets whose membership
-    * exceeds the cap before any pair is generated: a degenerate band (all
-    * vectors on the same side of every hyperplane in it — clustered or
-    * duplicated embeddings) would make one bucket's join fan-out quadratic,
-    * which AQE cannot split. With 2-bit default bands a bucket legitimately
+    * exceeds the cap before any pair is generated: the skew contract of
+    * [[graft.operators.Banding]] (here a degenerate band is all vectors on
+    * the same side of every hyperplane in it — clustered or duplicated
+    * embeddings). With 2-bit default bands a bucket legitimately
     * holds ~n/4 vectors, so the default cap is high (65536) — it is a skew
     * guard, not a recall knob; at scale raise `bandBits` (8 bits → ~n/256
     * buckets) so legitimate buckets sit far under the cap. Documented
@@ -215,20 +214,10 @@ object Sim {
         when(expr("graft_dot(e, r)") >= 0, expr("shiftleft(CAST(1 AS BIGINT), bit)"))
           .otherwise(0L).as("sb"))
       .groupBy("vec_id").agg(sum(col("sb")).as("sig")))
-    // bucket-size cap (see scaladoc): the window count partitions on the
-    // SAME (band, bv) key the candidate self-join shuffles on, and the
-    // capped frame is kept (when tr is present) so both join sides read it
-    val bands = keep(sig.select(col("vec_id"),
-        posexplode(expr(
-          s"transform(sequence(0, ${nBands - 1}), b -> (sig >> (b * $bandBits)) & ${(1L << bandBits) - 1})"))
-        .as(Seq("band", "bv")))
-      .withColumn("bsz", count(lit(1)).over(
-        Window.partitionBy("band", "bv")))
-      .where(col("bsz") <= maxBucket).drop("bsz"))
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
+    // capped band frame kept (when tr is present) so both join sides read it
+    val cand = graft.operators.Banding.bucketPairs(
+      sig.select(col("vec_id"), graft.operators.Banding.bitBands("sig", nBands, bandBits)),
+      "vec_id", maxBucket, tr)
     // exact cosine re-rank of the bucketed candidates, PIPELINED: the raw
     // candidate stream goes straight through the two vector joins and the
     // ≥ tau cut, and only the surviving true pairs are deduped. A distinct

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incremental batch dedup against a persisted corpus index (SURVEY.md
@@ -66,34 +65,23 @@ object DedupIndex {
     * attribution join membership back on the ids.
     *
     * `maxBucket` caps the COMBINED (batch + index) bucket membership
-    * before any pair is generated — the same skew contract as
-    * `dedup_minhash`: one degenerate band value (the minhash of a
-    * boilerplate shingle) would make a single bucket's fan-out quadratic,
-    * which AQE cannot split. The window count runs partitioned on the
-    * SAME (band, bv) key the joins shuffle on. The capped union feeds
-    * three consumers (two join sides × two joins), so callers pass a
-    * [[Tracked]] to compute it once; without one the pipeline stays
-    * persist-free (recomputation over unowned pinned blocks).
+    * before any pair is generated: the skew contract of [[Banding]], the
+    * same as `dedup_minhash`'s. The capped union feeds three consumers
+    * (two join sides × two joins), so callers pass a [[Tracked]] to
+    * compute it once; without one the pipeline stays persist-free. The
+    * union is never joined with itself: that would pair index docs with
+    * each other, the work this operator exists to avoid.
     */
   def candidates(batchBands: DataFrame, indexBands: DataFrame,
       maxBucket: Int = 65536, tr: Tracked = null): DataFrame = {
-    def keep(df: DataFrame) = if (tr == null) df else tr.persist(df)
     val u = batchBands.select(col("doc_id"), col("band"), col("bv"), lit(true).as("isb"))
       .unionByName(indexBands.select(col("doc_id"), col("band"), col("bv"), lit(false).as("isb")))
-    val capped = keep(u
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy("band", "bv")))
-      .where(col("bsz") <= maxBucket).drop("bsz"))
+    val capped = Banding.cap(u, maxBucket, tr)
     val b = capped.where(col("isb")).drop("isb")
     val ix = capped.where(!col("isb")).drop("isb")
-    val cross = b.as("a").join(ix.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"))
-    val within = b.as("a").join(b.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-    cross.unionByName(within).distinct()
+    val cross = Banding.join(b, ix, "doc_id", idCond = _ =!= _)
+      .select(least(col("a_id"), col("b_id")).as("a_id"),
+        greatest(col("a_id"), col("b_id")).as("b_id"))
+    cross.unionByName(Banding.join(b, b, "doc_id")).distinct()
   }
 }

@@ -209,19 +209,21 @@ object FileBloom {
   }
 
   /** Build + write the `_bloom.tsv` sidecar for the batch at
-    * `dir/dataRel`. Bitmaps come from the parquet DICTIONARY pages of the
-    * just-written files ([[dictionaryBits]] — O(files × distinct values)
-    * of driver metadata reads, zero Spark jobs); any (file, column) that
-    * is not provably dictionary-complete falls back to the original
-    * distributed pass, restricted to exactly those files (the per-column
-    * null filter keeps null rows out of the filter; the batch was just
-    * written so the re-reads are page-cache-warm). Sidecar content is
-    * bit-identical between the two paths — FileBloomSpec pins it
+    * `dir/dataRel`, whose parquet files are `files` (its
+    * [[ManifestTable.batchFiles]]). Bitmaps come from the parquet
+    * DICTIONARY pages of the just-written files ([[dictionaryBits]] —
+    * O(files × distinct values) of driver metadata reads, zero Spark
+    * jobs); any (file, column) that is not provably dictionary-complete
+    * falls back to the original distributed pass, restricted to exactly
+    * those files (the per-column null filter keeps null rows out of the
+    * filter; the batch was just written so the re-reads are
+    * page-cache-warm). Sidecar content is bit-identical between the two
+    * paths — FileBloomSpec pins it
     * (`forceScan` exists for that spec: it marks every pair ambiguous so
     * the original distributed pass produces the comparison sidecar). */
   private[graft] def write(spark: SparkSession, fs: FileSystem,
-      dir: String, dataRel: String, bloomCols: Seq[String], mBits: Int,
-      k: Int, schema: org.apache.spark.sql.types.StructType,
+      dir: String, dataRel: String, files: Seq[Path], bloomCols: Seq[String],
+      mBits: Int, k: Int, schema: org.apache.spark.sql.types.StructType,
       forceScan: Boolean = false): Unit = {
     require(mBits > 0 && mBits % 8 == 0, s"mBits must be a multiple of 8")
     require(k >= 1, "k must be >= 1")
@@ -230,9 +232,6 @@ object FileBloom {
     cols.foreach(c => require(fields.contains(c),
       s"bloomCols column $c not in batch schema ${fields.keys.toSeq.sorted}"))
     val b64 = java.util.Base64.getEncoder
-    val files = fs.listStatus(new Path(s"$dir/$dataRel")).toSeq
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
     val conf = spark.sparkContext.hadoopConfiguration
     // footer-dictionary pass: (file, col) -> Some(bits) | None (= no line);
     // ambiguous pairs collect for the restricted scan

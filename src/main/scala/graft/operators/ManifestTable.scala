@@ -536,7 +536,7 @@ object ManifestTable {
 
   /** Write `df` as the immutable batch `dataRel`, then its sidecars, all
     * before any manifest names it; returns the batch's parquet files as
-    * manifest entries, sorted.
+    * manifest entries, sorted. The batch dir is listed once, for all three.
     *
     * File-skipping stats (r14; footer-sourced since r18, see
     * [[writeStats]]): min/max/non-null-count per file for `statsCols`
@@ -549,13 +549,17 @@ object ManifestTable {
       dataRel: String, df: DataFrame, statsCols: Seq[String],
       bloomCols: Seq[String], bloomBits: Int): Seq[String] = {
     microsWrite(df, s"$dir/$dataRel")
-    if (statsCols.nonEmpty) writeStats(spark, fs, dir, dataRel, statsCols, df.schema)
+    val files = batchFiles(fs, dir, dataRel)
+    if (statsCols.nonEmpty) writeStats(spark, fs, dir, dataRel, files, statsCols, df.schema)
     if (bloomCols.nonEmpty)
-      FileBloom.write(spark, fs, dir, dataRel, bloomCols, bloomBits, 4, df.schema)
-    fs.listStatus(new Path(s"$dir/$dataRel")).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$dataRel/$n")
+      FileBloom.write(spark, fs, dir, dataRel, files, bloomCols, bloomBits, 4, df.schema)
+    files.map(p => s"$dataRel/${p.getName}")
   }
+
+  /** The `.parquet` files of the batch dir `dir/dataRel`, sorted by name. */
+  private[graft] def batchFiles(fs: FileSystem, dir: String, dataRel: String): Seq[Path] =
+    fs.listStatus(new Path(s"$dir/$dataRel")).toSeq
+      .map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
 
   /** Commit `df` as the next snapshot: append (new files join the current
     * snapshot's) or replace (new files ARE the snapshot). Returns the
@@ -1143,8 +1147,8 @@ object ManifestTable {
   }
 
   /** Per-(file, column) footer stat lines (r19 granular form of the r18
-    * all-or-nothing footerStatsLines): for every `.parquet` file of the
-    * batch (sorted by name) and every requested column, either the exact
+    * all-or-nothing footerStatsLines): for every file of `files` (one
+    * batch's [[batchFiles]]) and every requested column, either the exact
     * sidecar line reconstructed from the parquet footer, or None when that
     * PAIR is not provably render-identical (missing/dropped stats — NaN
     * doubles, oversized binary, INT96 — sign-ambiguous zero double/float
@@ -1152,9 +1156,8 @@ object ManifestTable {
     * sorted file names and the per-pair map; the caller scans ONLY the
     * ambiguous files instead of the whole batch.
     */
-  private[graft] def footerStatsPartial(spark: SparkSession, fs: FileSystem,
-      dir: String, dataRel: String, cols: Seq[String],
-      schema: org.apache.spark.sql.types.StructType)
+  private[graft] def footerStatsPartial(spark: SparkSession, files: Seq[Path],
+      cols: Seq[String], schema: org.apache.spark.sql.types.StructType)
       : (Seq[String], Map[(String, String), Option[String]]) = {
     import org.apache.spark.sql.types._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -1171,9 +1174,6 @@ object ManifestTable {
            FloatType | StringType | BooleanType | TimestampType => true
       case _ => false
     }
-    val files = fs.listStatus(new Path(s"$dir/$dataRel")).toSeq
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
     val conf = spark.sparkContext.hadoopConfiguration
     val out = Map.newBuilder[(String, String), Option[String]]
     files.foreach { p =>
@@ -1271,13 +1271,14 @@ object ManifestTable {
   private[graft] def footerStatsLines(spark: SparkSession, fs: FileSystem,
       dir: String, dataRel: String, cols: Seq[String],
       schema: org.apache.spark.sql.types.StructType): Option[Seq[String]] = {
-    val (names, pairs) = footerStatsPartial(spark, fs, dir, dataRel, cols, schema)
+    val (names, pairs) = footerStatsPartial(spark, batchFiles(fs, dir, dataRel), cols, schema)
     if (pairs.values.exists(_.isEmpty)) None
     else Some(names.flatMap(f => cols.map(c => pairs((f, c)).get)))
   }
 
   /** Collect per-file min/max/non-null stats for `statsCols` over the
-    * batch at `dir/dataRel` and write the `_stats.tsv` sidecar: one line
+    * batch at `dir/dataRel`, whose parquet files are `files` (its
+    * [[batchFiles]]), and write the `_stats.tsv` sidecar: one line
     * per (file, column), files sorted by name, columns in request order.
     * Lines come from the parquet footers ([[footerStatsPartial]]) where
     * those are provably render-identical, else from the distributed scan
@@ -1296,10 +1297,10 @@ object ManifestTable {
     * zone-independent and stay as strings.
     */
   private[graft] def writeStats(spark: SparkSession, fs: FileSystem, dir: String,
-      dataRel: String, statsCols: Seq[String],
+      dataRel: String, files: Seq[Path], statsCols: Seq[String],
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val cols = statsCols.distinct
-    val (names, pairs) = footerStatsPartial(spark, fs, dir, dataRel, cols, schema)
+    val (names, pairs) = footerStatsPartial(spark, files, cols, schema)
     // granular fallback (r19, verdict item 3): the r18 path degraded the
     // WHOLE batch to the distributed scan when ANY (file, column) was
     // ambiguous (e.g. one exactly-zero double bound); now the scan reads
@@ -1311,8 +1312,7 @@ object ManifestTable {
       if (ambiguous.isEmpty) names.flatMap(f => cols.map(c => pairs((f, c)).get))
       else {
         val ambFiles = ambiguous.map(_._1)
-        val scanned = scanStatsLines(spark, fs, dir, dataRel, cols,
-          onlyFiles = Some(ambFiles))
+        val scanned = scanStatsLines(spark, files.filter(p => ambFiles(p.getName)), cols)
         names.flatMap(f => cols.map { c =>
           pairs((f, c)).getOrElse(scanned((f, c)))
         })
@@ -1328,17 +1328,13 @@ object ManifestTable {
     finally out.close()
   }
 
-  /** The r14 distributed stats pass, as lines keyed by (file, column);
-    * `onlyFiles` restricts the scan to a subset of the batch's part files
-    * (the granular-fallback path — ambiguous files only). */
-  private def scanStatsLines(spark: SparkSession, fs: FileSystem, dir: String,
-      dataRel: String, statsCols: Seq[String], onlyFiles: Option[Set[String]])
-      : Map[(String, String), String] = {
+  /** The r14 distributed stats pass over `files` (a whole batch, or only
+    * its ambiguous files on the granular-fallback path), as lines keyed
+    * by (file, column). */
+  private def scanStatsLines(spark: SparkSession, files: Seq[Path],
+      statsCols: Seq[String]): Map[(String, String), String] = {
     import org.apache.spark.sql.functions._
-    val allNames = fs.listStatus(new Path(s"$dir/$dataRel")).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-    val scanNames = onlyFiles.fold(allNames)(s => allNames.filter(s))
-    val bdf = spark.read.parquet(scanNames.map(n => s"$dir/$dataRel/$n"): _*)
+    val bdf = spark.read.parquet(files.map(_.toString): _*)
     val fields = bdf.schema.fields.map(f => f.name -> f.dataType).toMap
     val cols = statsCols.distinct
     cols.foreach(c => require(fields.contains(c),
@@ -1370,7 +1366,7 @@ object ManifestTable {
     // stats for them so they prune under any predicate instead of being
     // conservatively kept forever
     val seen = rows.map(_.getAs[String]("f").split('/').last).toSet
-    val empties = scanNames
+    val empties = files.map(_.getName)
       .filter(n => !seen.contains(n))
       .flatMap(n => cols.map(c =>
         (n, c) -> s"$n\t$c\t${fields(c).typeName}\t0\t0\t-\t-"))
@@ -1382,7 +1378,7 @@ object ManifestTable {
   private[graft] def writeStatsScan(spark: SparkSession, fs: FileSystem, dir: String,
       dataRel: String, statsCols: Seq[String]): Unit = {
     val cols = statsCols.distinct
-    val scanned = scanStatsLines(spark, fs, dir, dataRel, cols, None)
+    val scanned = scanStatsLines(spark, batchFiles(fs, dir, dataRel), cols)
     writeStatsLines(fs, dir, dataRel, scanned.keys.map(_._1).toSeq.distinct.sorted
       .flatMap(f => cols.map(c => scanned((f, c)))))
   }

@@ -218,35 +218,21 @@ object Llm {
     * pair keeps p ≈ 0.90 and j=0.7 keeps p ≈ 0.996. Candidates come from
     * a bucketed equi-join on (band, value) — never all pairs.
     *
-    * `maxBucket` bounds per-bucket join fan-out: one degenerate band value
-    * (the minhash of a boilerplate shingle shared by everything) would make
-    * a single bucket's pair volume quadratic — AQE splits partitions but
-    * cannot split one key's join fan-out — so buckets larger than
-    * `maxBucket` are DROPPED (documented recall loss on pathological
-    * buckets only; the same skew contract [[graft.streaming.IncrementalDedup]]
-    * enforces on stream state via its own maxBucket). The capped band frame
-    * is persisted through `tr` (nDocs × nBands tiny rows), so both sides of
-    * the self-join read the cache instead of recomputing the signature
+    * Buckets larger than `maxBucket` are dropped: the skew contract of
+    * [[graft.operators.Banding]]. The capped band frame is persisted
+    * through `tr` (nDocs × nBands tiny rows), so both sides of the
+    * self-join read the cache instead of recomputing the signature
     * aggregate and the bucket-size window.
     */
   private[graft] def minhashCandidates(docs: DataFrame, nBands: Int,
-      rowsPerBand: Int, maxBucket: Int, tr: graft.operators.Tracked): DataFrame = {
+      rowsPerBand: Int, maxBucket: Int, tr: graft.operators.Tracked): DataFrame =
     // band math lives in the operator (round 8): the same band table backs
     // the incremental batch-vs-index path, and sharing the code is what
     // makes the incremental candidate set provably the full rebuild's
-    val bands0 = graft.operators.DedupIndex.bandTable(docs, nBands, rowsPerBand)
-    // bucket-size cap: one window count partitioned on the SAME (band, bv)
-    // key the candidate join shuffles on — the exchange is shared work, and
-    // the filter runs before any pair is generated
-    val bands = tr.persist(bands0
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy("band", "bv")))
-      .where(col("bsz") <= maxBucket).drop("bsz"))
-    bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+    graft.operators.Banding.bucketPairs(
+        graft.operators.DedupIndex.bandTable(docs, nBands, rowsPerBand),
+        "doc_id", maxBucket, tr)
       .distinct()
-  }
 
   /** Jaccard pair stream wired for [[graft.operators.Components]]: a
     * TRACKED persist (not a seal!) so Components' dispatch count — the

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.T.Q
 import graft.multimodal.{MediaRow, MultiModal}
@@ -78,6 +79,30 @@ object Media {
   // per-JVM tag, same concurrency contract as Sources.tmp
   private lazy val runTag = java.util.UUID.randomUUID().toString.take(8)
 
+  /** (media_id, h) for each payload in the parquet dir `dir` whose
+    * fingerprint `fp` is defined. */
+  private def fingerprints(s: SparkSession, dir: String,
+      fp: Array[Byte] => Option[Long]): DataFrame = {
+    val h = udf(fp)
+    s.read.parquet(dir).select(col("media_id"), h(col("payload")).as("h"))
+      .where(col("h").isNotNull)
+  }
+
+  /** Near-dup pairs (a_id, b_id, hamming) over a [[fingerprints]] frame:
+    * `nBands` 16-bit slices of h as [[graft.operators.Banding]] buckets
+    * (cap 4096, persisted through `tr`), then the exact Hamming
+    * ≤ `maxHamming` re-rank of the distinct candidates. */
+  private def hammingPairs(hashes: DataFrame, nBands: Int, maxHamming: Int,
+      tr: graft.operators.Tracked): DataFrame =
+    graft.operators.Banding.bucketPairs(
+        hashes.select(col("media_id"), col("h"),
+          graft.operators.Banding.bitBands("h", nBands, 16)),
+        "media_id", 4096, tr, carry = Seq("h"))
+      .select(col("a_id"), col("b_id"),
+        bit_count(col("a_h").bitwiseXOR(col("b_h"))).cast("long").as("hamming"))
+      .distinct()
+      .where(col("hamming") <= maxHamming)
+
   val queries: Map[String, Q] = Map(
     "multimodal_meta" -> ((s, sf) => {
       import s.implicits._
@@ -120,7 +145,7 @@ object Media {
     // the identical plan runs over the parquet binary column: decode +
     // hash are the per-partition map stage, only (band, 8-byte hash, id)
     // triples ever shuffle, and the band-bucket cap bounds any degenerate
-    // bucket (the LSH band-cap contract).
+    // bucket (the skew contract of operators/Banding.scala).
     "multimodal_phash" -> ((s, sf) => {
       import s.implicits._
       val dir = {
@@ -128,29 +153,9 @@ object Media {
         s"${sys.props("java.io.tmpdir")}/graft_phash_${runTag}_$tag"
       }
       s.createDataset(phashFixtures).toDF().write.mode("overwrite").parquet(dir)
-      val dh = udf { p: Array[Byte] =>
-        MultiModal.decodeImage(p).map(MultiModal.dhash64): Option[Long]
-      }
-      val hashes = s.read.parquet(dir)
-        .select(col("media_id"), dh(col("payload")).as("h"))
-        .where(col("h").isNotNull)
-      val bands = hashes.select(col("media_id"), col("h"),
-        posexplode(expr(
-          "transform(sequence(0, 3), b -> (h >> (b * 16)) & 65535)"))
-          .as(Seq("band", "bv")))
+      val hashes = fingerprints(s, dir, p => MultiModal.decodeImage(p).map(MultiModal.dhash64))
       val tr = new graft.operators.Tracked
-      val bp = tr.persist(bands
-        .withColumn("bsz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "bv")))
-        .where(col("bsz") <= 4096).drop("bsz"))
-      tr.seal(bp.as("a").join(bp.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.media_id") < col("b.media_id"))
-        .select(col("a.media_id").as("a_id"), col("b.media_id").as("b_id"),
-          bit_count(col("a.h").bitwiseXOR(col("b.h"))).cast("long").as("hamming"))
-        .distinct()
-        .where(col("hamming") <= 10))
-        .orderBy("a_id", "b_id")
+      tr.seal(hammingPairs(hashes, 4, 10, tr)).orderBy("a_id", "b_id")
     }),
 
     // image near-dup DEDUP end product (round 16, rows-only — MediaSpec
@@ -172,29 +177,9 @@ object Media {
         s"${sys.props("java.io.tmpdir")}/graft_mmdedup_${runTag}_$tag"
       }
       s.createDataset(phashFixtures).toDF().write.mode("overwrite").parquet(dir)
-      val dh = udf { p: Array[Byte] =>
-        MultiModal.decodeImage(p).map(MultiModal.dhash64): Option[Long]
-      }
-      val hashes = s.read.parquet(dir)
-        .select(col("media_id"), dh(col("payload")).as("h"))
-        .where(col("h").isNotNull)
-      val bands = hashes.select(col("media_id"), col("h"),
-        posexplode(expr(
-          "transform(sequence(0, 3), b -> (h >> (b * 16)) & 65535)"))
-          .as(Seq("band", "bv")))
+      val hashes = fingerprints(s, dir, p => MultiModal.decodeImage(p).map(MultiModal.dhash64))
       val tr = new graft.operators.Tracked
-      val bp = tr.persist(bands
-        .withColumn("bsz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "bv")))
-        .where(col("bsz") <= 4096).drop("bsz"))
-      val pairs = bp.as("a").join(bp.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.media_id") < col("b.media_id"))
-        .select(col("a.media_id").as("a_id"), col("b.media_id").as("b_id"),
-          bit_count(col("a.h").bitwiseXOR(col("b.h"))).cast("long").as("hamming"))
-        .distinct()
-        .where(col("hamming") <= 10)
-        .select("a_id", "b_id")
+      val pairs = hammingPairs(hashes, 4, 10, tr).select("a_id", "b_id")
       val clusters = graft.operators.Components.connected(pairs, "a_id", "b_id", tr)
       hashes.select(col("media_id"))
         .join(clusters.withColumnRenamed("id", "media_id"), Seq("media_id"), "left")
@@ -259,29 +244,9 @@ object Media {
         s"${sys.props("java.io.tmpdir")}/graft_audiofp_${runTag}_$tag"
       }
       s.createDataset(audioFixtures).toDF().write.mode("overwrite").parquet(dir)
-      val fp = udf { p: Array[Byte] =>
-        MultiModal.pcmSamples(p).map(MultiModal.audioFp32): Option[Long]
-      }
-      val hashes = s.read.parquet(dir)
-        .select(col("media_id"), fp(col("payload")).as("h"))
-        .where(col("h").isNotNull)
-      val bands = hashes.select(col("media_id"), col("h"),
-        posexplode(expr(
-          "transform(sequence(0, 1), b -> (h >> (b * 16)) & 65535)"))
-          .as(Seq("band", "bv")))
+      val hashes = fingerprints(s, dir, p => MultiModal.pcmSamples(p).map(MultiModal.audioFp32))
       val tr = new graft.operators.Tracked
-      val bp = tr.persist(bands
-        .withColumn("bsz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "bv")))
-        .where(col("bsz") <= 4096).drop("bsz"))
-      tr.seal(bp.as("a").join(bp.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.media_id") < col("b.media_id"))
-        .select(col("a.media_id").as("a_id"), col("b.media_id").as("b_id"),
-          bit_count(col("a.h").bitwiseXOR(col("b.h"))).cast("long").as("hamming"))
-        .distinct()
-        .where(col("hamming") <= 6))
-        .orderBy("a_id", "b_id")
+      tr.seal(hammingPairs(hashes, 2, 6, tr)).orderBy("a_id", "b_id")
     }),
 
     // video frame sampling (round 11, rows-only — MediaSpec pins frame

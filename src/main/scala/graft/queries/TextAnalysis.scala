@@ -93,17 +93,12 @@ object TextAnalysis {
     * signature from the algebraic bit-vote aggregator, 4 × 16-bit band
     * equi-join buckets — the sub-quadratic candidate stage behind
     * `dedup_simhash`. `maxBucket` drops buckets whose membership exceeds
-    * the cap (round 7): one degenerate band value — near-identical
-    * boilerplate collapsing a 16-bit band — would otherwise make a single
-    * bucket's join fan-out quadratic, which AQE cannot split. Documented
-    * recall loss on pathological buckets only; same skew contract as
-    * [[graft.queries.Llm.minhashCandidates]] / IncrementalDedup. The
-    * capped band frame is persisted via `tr` (4 tiny rows per doc) so both
-    * self-join sides read the cache.
+    * the cap (round 7): the skew contract of [[graft.operators.Banding]].
+    * The capped band frame is persisted via `tr` (4 tiny rows per doc) so
+    * both self-join sides read the cache.
     */
   private[graft] def simhashBandPairs(docsRaw: org.apache.spark.sql.DataFrame,
       maxBucket: Int, tr: graft.operators.Tracked): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = Llm.shingleRows(Llm.shingleArrays(docsRaw))
       .select(col("doc_id"), col("h"))
     // one ALGEBRAIC bit-vote aggregator ([[graft.functions.Udx.SimHashAgg]])
@@ -113,16 +108,10 @@ object TextAnalysis {
     // one aggregate column wide (narrow to analyze, cheap to compile).
     val sim = tr.persist(toks.groupBy("doc_id")
       .agg(graft.functions.Udx.simhashOf(col("h")).as("sh")))
-    val bands = tr.persist(sim.select(col("doc_id"), col("sh"),
-        posexplode(expr(
-          "transform(sequence(0, 3), b -> (sh >> (b * 16)) & 65535)")).as(Seq("band", "bv")))
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy("band", "bv")))
-      .where(col("bsz") <= maxBucket).drop("bsz"))
-    bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.sh").as("sha"), col("b.sh").as("shb"))
+    graft.operators.Banding.bucketPairs(
+        sim.select(col("doc_id"), col("sh"), graft.operators.Banding.bitBands("sh", 4, 16)),
+        "doc_id", maxBucket, tr, carry = Seq("sh"))
+      .select(col("a_id"), col("b_id"), col("a_sh").as("sha"), col("b_sh").as("shb"))
       .distinct()
   }
 

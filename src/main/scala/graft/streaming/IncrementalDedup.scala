@@ -38,7 +38,8 @@ case class CandidatePair(a_id: Long, b_id: Long)
   *    the min-hash of a boilerplate shingle shared by everything) must
   *    bound state and emission instead of going quadratic — overflow
   *    drops candidates (documented recall loss on pathological buckets),
-  *    the same skew-bounding contract as the batch LSH buckets.
+  *    the same skew-bounding contract as the batch LSH buckets
+  *    ([[graft.operators.Banding]]).
   */
 object IncrementalDedup {
 

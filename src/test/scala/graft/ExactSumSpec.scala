@@ -255,6 +255,33 @@ class ExactSumSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("dsum and dxsum fail loudly on NaN, ±Inf and out-of-range doubles, " +
+    "naming graft_dsum; nulls are skipped") {
+    def arithmetic(f: => Any): ArithmeticException = {
+      val e = intercept[Exception](f)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case a: ArithmeticException => a }
+        .getOrElse(fail(s"no ArithmeticException in the cause chain of $e"))
+    }
+    // 1e17 at scale 2 is 1e19 unscaled, past Long.MaxValue ≈ 9.22e18
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity, 1e17)) {
+      val df = spark.range(0, 8, 1, 2).select(
+        when(col("id") === 5, lit(bad)).otherwise(col("id").cast("double")).as("x"),
+        when(col("id") =!= 3, lit(1.5)).as("y"))
+      for (agg <- Seq(T.dsum(col("x"), 2), T.dxsum(col("x"), col("y"), 2, 2),
+          T.dxsum(col("y"), col("x"), 2, 2))) {
+        val e = arithmetic(df.agg(agg).collect())
+        assert(e.getMessage.contains("graft_dsum"), s"$bad: ${e.getMessage}")
+      }
+    }
+    // the same frame without the dirty row: the null y is skipped
+    val clean = spark.range(0, 8, 1, 2).select(col("id").cast("double").as("x"),
+      when(col("id") =!= 3, lit(1.5)).as("y"))
+    assert(clean.agg(T.dsum(col("y"), 2)).head.getDouble(0) == 10.5)
+    assert(clean.agg(T.dxsum(col("x"), col("y"), 2, 2)).head.getDouble(0) == 37.5)
+  }
+
   // --- r19: graft_dsumd (decimal-output 128-bit sum) ---
 
   test("dsumd == built-in decimal(38) sum: exact values, exact TYPE, " +

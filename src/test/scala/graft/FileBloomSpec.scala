@@ -56,12 +56,13 @@ class FileBloomSpec extends AnyFunSuite with SparkFixture {
     val fs = fsOf(dir)
     var footerJobs = -1
     footerJobs = countJobs {
-      graft.operators.FileBloom.write(spark, fs, dir, rel, cols, mBits, 4,
-        df.schema)
+      graft.operators.FileBloom.write(spark, fs, dir, rel,
+        graft.operators.ManifestTable.batchFiles(fs, dir, rel), cols, mBits, 4, df.schema)
     }
     val footer = sidecar(dir, rel).map(_.toSet)
     fs.delete(new Path(s"$dir/$rel/_bloom.tsv"), false)
-    graft.operators.FileBloom.write(spark, fs, dir, rel, cols, mBits, 4,
+    graft.operators.FileBloom.write(spark, fs, dir, rel,
+      graft.operators.ManifestTable.batchFiles(fs, dir, rel), cols, mBits, 4,
       df.schema, forceScan = true)
     val scan = sidecar(dir, rel).map(_.toSet)
     (footer, scan, footerJobs)

@@ -130,13 +130,14 @@ class ManifestStatsSpec extends AnyFunSuite with SparkFixture {
     assert(footer.isEmpty)
     // ...but the granular map must be ambiguous ONLY for file-0's d
     val (names, pairs) = graft.operators.ManifestTable
-      .footerStatsPartial(spark, fs, dir, rel, Seq("l", "d"), df.schema)
+      .footerStatsPartial(spark, graft.operators.ManifestTable.batchFiles(fs, dir, rel),
+        Seq("l", "d"), df.schema)
     val amb = pairs.collect { case (k, None) => k }.toSet
     assert(amb.map(_._2) == Set("d"), s"ambiguous pairs: $amb")
     assert(amb.size == 1)
     // the written sidecar (granular path) == the pure-scan sidecar
     graft.operators.ManifestTable.writeStats(spark, fs, dir, rel,
-      Seq("l", "d"), df.schema)
+      graft.operators.ManifestTable.batchFiles(fs, dir, rel), Seq("l", "d"), df.schema)
     val in = fs.open(new Path(s"$dir/$rel/_stats.tsv"))
     val mixed = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .map(_.trim).filter(_.nonEmpty).toList finally in.close()
